@@ -96,6 +96,32 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return bad == 0
 
 
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star + small-star round over the canonical edge list e."""
+    # large-star over the symmetric view
+    sym = e.unionByName(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    mins = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
+    mins = mins.select("u", F.least("u", "nbr_min").alias("m"))
+    large = _canon(
+        sym.join(mins, "u").where(F.col("v") > F.col("u")).select("v", "m"),
+        "v",
+        "m",
+    )
+
+    # small-star: group by the larger endpoint (canonical v), neighbors
+    # are the smaller endpoints (canonical u)
+    smins = large.groupBy("v").agg(F.min("u").alias("m"))
+    return _canon(
+        large.join(smins, "v")
+        .select(F.col("u").alias("a"), F.col("m").alias("b"))
+        .unionByName(smins.select(F.col("v").alias("a"), F.col("m").alias("b"))),
+        "a",
+        "b",
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -137,55 +163,38 @@ def connected_components(
     )
     e = mat(e)
     prev: DataFrame | None = None
-
-    # max_iterations + 1 iterations allow up to max_iterations star ROUNDS:
-    # convergence produced by round k is detected by the check at the top
-    # of iteration k+1, so the final round needs one extra checking pass.
-    for _ in range(max_iterations + 1):
-        # Exact fixpoint test first — also the action that materializes the
-        # current round's lazy checkpoint; only after it completes is the
-        # PREVIOUS round's block set safe to release (e's checkpoint reads
-        # prev's blocks until then). Checking at the top of the round (vs
-        # the old signature-repeat test at the bottom) saves one entire
-        # redundant confirmation round of two stars + two joins, and an
-        # already-star input (e.g. exact-duplicate groups keyed to their
-        # min) converges with ZERO star rounds.
-        done = _is_star_forest(e)
-        if prev is not None:
-            cache.release(prev)
-            prev = None
-        if done:
-            break
-        prev = e
-
-        # large-star over the symmetric view
-        sym = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
-        mins = mins.select("u", F.least("u", "nbr_min").alias("m"))
-        large = _canon(
-            sym.join(mins, "u").where(F.col("v") > F.col("u")).select("v", "m"),
-            "v",
-            "m",
-        )
-
-        # small-star: group by the larger endpoint (canonical v), neighbors
-        # are the smaller endpoints (canonical u)
-        smins = large.groupBy("v").agg(F.min("u").alias("m"))
-        small = _canon(
-            large.join(smins, "v")
-            .select(F.col("u").alias("a"), F.col("m").alias("b"))
-            .unionByName(smins.select(F.col("v").alias("a"), F.col("m").alias("b"))),
-            "a",
-            "b",
-        )
-
-        e = mat(small)
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
-        )
+    converged = False
+    try:
+        # up to max_iterations star ROUNDS: convergence produced by round k is
+        # detected by the check at the top of iteration k+1, so the final
+        # round needs one extra checking pass — and a failed check there
+        # raises before building a round nobody would read.
+        for rounds in range(max_iterations + 1):
+            # Exact fixpoint test first — also the action that materializes
+            # the current round's lazy checkpoint; only after it completes is
+            # the PREVIOUS round's block set safe to release (e's checkpoint
+            # reads prev's blocks until then). Checking at the top of the
+            # round costs no confirmation round of two stars + two joins, and
+            # an already-star input (e.g. exact-duplicate groups keyed to
+            # their min) converges with ZERO star rounds.
+            converged = _is_star_forest(e)
+            if prev is not None:
+                cache.release(prev)
+                prev = None
+            if converged:
+                break
+            if rounds == max_iterations:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iterations} rounds"
+                )
+            prev = e
+            e = mat(_star_round(e))
+    finally:
+        # any exit but convergence (the raise above, a failed job) leaves no
+        # result to carry the blocks, so release them here; on convergence
+        # e's blocks back the returned plan
+        if not converged:
+            cache.release(prev, e)
 
     # no post-loop assertion needed: the loop exits only on the EXACT
     # star-forest test, so a split-cluster false fixpoint is impossible by

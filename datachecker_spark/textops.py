@@ -30,14 +30,19 @@ def tokens(text: Column | str) -> Column:
 
 
 def word_shingles(toks: Column, k: int = 2) -> Column:
-    """k-word shingles joined by single spaces; [] when fewer than k tokens."""
+    """k-word shingles joined by single spaces; [] when fewer than k tokens.
+
+    Shingle i is row i of k shifted slices zipped side by side, so the
+    lambda reads only its own struct element: a lambda that sliced `toks`
+    would re-evaluate the whole `toks` expression once per shingle
+    (interpreted higher-order functions get no common-subexpression
+    elimination), quadratic in the document length."""
     n = F.size(toks)
+    m = n - k + 1
+    zipped = F.arrays_zip(*[F.slice(toks, i + 1, m) for i in range(k)])
     return F.when(
         n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        ),
+        F.transform(zipped, lambda z: F.concat_ws(" ", *[z[str(i)] for i in range(k)])),
     ).otherwise(F.array().cast("array<string>"))
 
 
@@ -56,19 +61,6 @@ def char_grams(text: Column | str, k: int = 8) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide minhash signature as a Column expression: per hash
-    function h, the minimum of xxhash64(shingle, h) over the distinct
-    shingle set. Semantic reference ONLY — higher-order functions are not
-    whole-stage-codegen'd in Spark, so the hot path (minhash_table) computes
-    the identical signature relationally via explode + min aggregates."""
-    distinct = F.array_distinct(shingles)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda h: F.array_min(F.transform(distinct, lambda s: F.xxhash64(s, h))),
-    )
-
-
 def shingle_sets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -80,40 +72,30 @@ def shingle_sets(
     of the minhash and exact-Jaccard pipelines (empty-set docs dropped, as
     both consumers require).
 
-    Tokenization is the interpreted-HOF pass that dominates these operators
-    (measured: 4 re-derivations cost +50s at sf0.1 — see ngram_jaccard_pairs
-    docstring), so a composition that runs BOTH pipelines over the same
-    corpus should compute this once, materialize it, and hand it to each
-    consumer via their `sets=` parameter: one corpus scan + one tokenize
-    pass total instead of one per operator. Contract: the CALLER owns the
+    Shingling is linear per document: `text_col` (often a derived
+    expression such as fingerprint.flattened_text, which the optimizer
+    inlines here) and its tokenization are evaluated exactly once per
+    document. The token array comes from a one-element explode, a Generate
+    node, which neither CollapseProject nor filter pushdown moves an
+    expression across; over a plain projection the short-doc filter would
+    be rewritten onto the projection's input and re-run the whole text
+    expression (tests/test_plans.py guards the plan shape).
+
+    A composition that runs BOTH pipelines over the same corpus should
+    still compute this once, materialize it, and hand it to each consumer
+    via their `sets=` parameter: one corpus scan + one tokenize pass total
+    instead of one per operator. Contract: the CALLER owns the
     materialization (pass an already-checkpointed frame) and the disposal
     (the checkpoint blocks surface as LogicalRDD leaves of every consumer's
     plan, so cache.release(result) on any consumer reaches them — same
     contract as the operators' internal checkpoints)."""
-    return df.select(
+    toks = df.select(
         F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(tokens(text_col), shingle_k)).alias("sh"),
-    ).where(F.size("sh") > 0)
-
-
-def minhash_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    shingle_k: int = 2,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """(id, mh0..mh{H-1}): signatures via explode + H codegen'd min-aggs —
-    the vectorized form of minhash_signature (same values, same seeds)."""
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_shingles(tokens(text_col), shingle_k))).alias("s"),
+        F.explode(F.array(tokens(text_col))).alias("toks"),
+    ).where(F.size("toks") >= shingle_k)
+    return toks.select(
+        "id", F.array_distinct(word_shingles(F.col("toks"), shingle_k)).alias("sh")
     )
-    aggs = [
-        F.min(F.xxhash64(F.col("s"), F.lit(h))).alias(f"mh{h}") for h in range(num_hashes)
-    ]
-    return ex.groupBy("id").agg(*aggs)
 
 
 def band_keys(sig_cols: list[str], bands: int, rows: int) -> Column:
@@ -177,8 +159,8 @@ def minhash_near_dup_pairs(
     # shingle arrays 16× per doc is the data amplification that kills this
     # at scale. Shingle sets re-join once, keyed by id, for verification.
     # Signatures derive from the SAME persisted shingle sets (one
-    # tokenization pass total — re-calling minhash_table here would
-    # re-tokenize the whole corpus).
+    # tokenization pass total — re-tokenizing here would scan and
+    # tokenize the whole corpus again).
     sig_cols = [f"mh{h}" for h in range(num_hashes)]
     sig = (
         base.select("id", F.explode("sh").alias("s"))
@@ -254,7 +236,8 @@ def ngram_jaccard_pairs(
     release_all between samples, sequential runs only,
     tools/bench_ngram_modes.py, 2026-08-20) prefix wins at EVERY
     threshold — t=0.2: 12.9s vs 23.7s, t=0.5: 10.5s vs 20.2s, t=0.7:
-    10.0s vs 18.0s (1.8–1.9×, identical row counts asserted per cell).
+    10.0s vs 18.0s (1.8–1.9×, identical row counts asserted per cell; both
+    modes then still paid quadratic shingling, see `materialize` below).
     "prefix" is therefore the production path for the standalone pair
     queries; "join" remains the count-based oracle-shaped plan. In the
     full dedup_e2e COMPOSITION the two modes measure flat at sf0.1
@@ -294,7 +277,10 @@ def ngram_jaccard_pairs(
     the keys before the checkpoint cuts the materialized bytes and the
     self-join hash/compare cost on top. hash_shingles=True is therefore
     the production default for the entry query; the bench-visible r3
-    regression (45.4s) was the string-key checkpoint.
+    regression (45.4s) was the string-key checkpoint. These figures
+    predate linear shingling (see shingle_sets), when each tokenization
+    pass was quadratic per document; the checkpoint-vs-re-derive choice
+    has not been re-measured since.
 
     sets: pre-tokenized shingle_sets(...) output shared across operators in
     a composition (see that docstring). The caller owns its materialization
@@ -311,8 +297,8 @@ def ngram_jaccard_pairs(
         "id", shingle.alias("s")
     )
     # tokenize ONCE: every consumer below (hot-shingle count, both self-join
-    # sides, set sizes) otherwise re-runs the interpreted HOF shingling over
-    # the corpus — measured 4 full tokenization passes per query. Caller
+    # sides, set sizes) otherwise re-runs the shingling over the corpus —
+    # 4 full tokenization passes per query. Caller
     # disposes via cache.release(result) — see minhash_near_dup_pairs.
     # With caller-provided `sets` the upstream is already materialized, so
     # the second checkpoint is skipped.

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from datachecker_spark import cache
@@ -153,6 +154,23 @@ def test_cc_releases_intermediate_blocks(spark):
     out.collect()
     cache.release(out)
     assert sc._jsc.getPersistentRDDs().size() <= baseline
+
+
+def test_cc_non_convergence_raises_and_releases(spark):
+    """Exhausting max_iterations raises without building a dead round, and
+    the blocks of the rounds it did build are released: no result exists
+    for the caller to release them through."""
+    sc = spark.sparkContext
+
+    def live():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    before = live()
+    edges = [(i, i + 1) for i in range(30)]
+    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iterations=1)
+    assert live() - before == set()
 
 
 def test_dedup_e2e_real_pairs(spark):

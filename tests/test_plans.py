@@ -95,3 +95,44 @@ def test_ref_checks_prune_spans_from_cache(spark):
                 assert "refs" in s
     finally:
         docs.unpersist()
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The parenthesized text of every `lambdafunction(` in a plan string
+    (nested lambdas appear both on their own and inside their parent)."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        i = j = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i : j - 1])
+        start = plan.find("lambdafunction(", i)
+    return bodies
+
+
+def test_shingling_tokenizes_once_per_doc(spark):
+    """shingle_sets over fingerprint.flattened_text: span flattening and
+    tokenization never run inside a per-element lambda (which re-evaluates
+    them once per shingle), and the short-doc filter is not pushed below
+    the token projection (which evaluates them a second time): `split(`
+    appears exactly once in the optimized plan."""
+    from datachecker_spark.datagen import make_docs
+    from datachecker_spark.fingerprint import flattened_text
+    from datachecker_spark.textops import shingle_sets
+
+    docs = make_docs(
+        spark, [("a", [("text", "b c", None, 1), ("text", "a ", None, 0)], "p0")]
+    )
+    flat = docs.select("doc_id", flattened_text("spans").alias("text"))
+    for k in (1, 2, 3):
+        sets = shingle_sets(flat, shingle_k=k)
+        plan = sets._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, plan
+        for body in bodies:
+            assert "split(" not in body and "array_sort(" not in body, body
+        assert plan.count("split(") == 1, plan
+        assert sets.collect()[0]["sh"] == [["a", "b", "c"], ["a b", "b c"], ["a b c"]][k - 1]

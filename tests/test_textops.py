@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import re
+import string
+
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from datachecker_spark import textops as X
@@ -29,6 +34,56 @@ def test_shingles_and_tokens(spark):
     assert row["t"] == ["the", "quick", "brown", "fox"]
     assert row["s2"] == ["the quick", "quick brown", "brown fox"]
     assert row["g"][0] == "The quic" and len(row["g"]) == len("The quick  brown fox") - 7
+
+
+# ASCII letters plus space, tab and newline: the characters on which
+# Java's and Python's \s (and their lower-casing) agree
+_WS = " \t\n"
+_TEXT = st.one_of(
+    st.none(),
+    st.text(alphabet=string.ascii_letters + _WS, max_size=40),
+    # few distinct short words: repeated shingles within one document
+    st.lists(
+        st.tuples(st.sampled_from(["a", "B", "ab"]), st.text(alphabet=_WS, min_size=1, max_size=3)),
+        max_size=10,
+    ).map(lambda ws: "".join(w + sep for w, sep in ws)),
+)
+
+
+def _ref_shingles(text, k):
+    if text is None:
+        return []
+    toks = [t for t in re.split(r"\s+", text.lower()) if t]
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+@settings(max_examples=10, deadline=None)
+@given(texts=st.lists(_TEXT, min_size=1, max_size=20), set_k=st.integers(1, 4))
+@example(
+    texts=[None, "", "   ", " \t\n ", "one", "a b", "A b a B a b", "x  y\tz\nw", "p q r"],
+    set_k=2,
+)
+def test_word_shingles_match_python_reference(spark, texts, set_k):
+    """word_shingles(tokens(text), k) for k = 1..4 equals a plain-Python
+    re.split reference element for element (order and repeats included),
+    and shingle_sets keeps exactly the docs with a non-empty set, holding
+    the reference's shingles deduplicated in first-occurrence order."""
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    ks = range(1, 5)
+    rows = df.select(
+        "doc_id", *[X.word_shingles(X.tokens("text"), k).alias(f"s{k}") for k in ks]
+    ).collect()
+    for r in rows:
+        for k in ks:
+            assert r[f"s{k}"] == _ref_shingles(texts[r["doc_id"]], k), (texts[r["doc_id"]], k)
+
+    got = {r["id"]: r["sh"] for r in X.shingle_sets(df, shingle_k=set_k).collect()}
+    want = {}
+    for i, text in enumerate(texts):
+        ref = list(dict.fromkeys(_ref_shingles(text, set_k)))
+        if ref:
+            want[i] = ref
+    assert got == want
 
 
 def test_ngram_jaccard_exact(spark):
