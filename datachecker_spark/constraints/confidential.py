@@ -41,8 +41,6 @@ except ImportError:  # pragma: no cover
     _HAVE_ARROW_RE2 = False
 
 from datachecker_spark.ahocorasick import AhoCorasick
-from datachecker_spark.contract import SEV_WARNING, as_violations
-from datachecker_spark.fingerprint import flattened_text
 
 CHECK_NAME = "confidential"
 
@@ -135,8 +133,12 @@ def contains_any_udf(patterns: list[str], engine: str = "regex"):
                 import pyarrow.compute as pc
 
                 # the series arrives Arrow-backed from Spark; from_pandas is
-                # a cheap re-wrap, the RE2 scan is the only real work
-                m = pc.match_substring_regex(pa.Array.from_pandas(texts), rx_str)
+                # a cheap re-wrap, the RE2 scan is the only real work. The
+                # explicit type keeps an all-NULL batch (docs with NULL
+                # spans) a string array, not a kernel-less null array.
+                m = pc.match_substring_regex(
+                    pa.Array.from_pandas(texts, type=pa.string()), rx_str
+                )
                 return m.to_pandas().fillna(False).astype(bool)
 
         else:  # pragma: no cover - exercised only on RE2-less pyarrow builds
@@ -201,19 +203,10 @@ def check_confidential(
     ~300-pattern crossover, Arrow regex UDF beyond (see resolve_engine).
     engine="expr"/"regex"/"automaton" force a path explicitly.
     """
-    pats = DEFAULT_PATTERNS if patterns is None else patterns
-    engine = resolve_engine(pats, engine)
-    # reuse the runner-materialized flattened text when present
-    flat = (
-        docs
-        if "_flat" in docs.columns
-        else docs.withColumn("_flat", flattened_text("spans"))
-    )
-    if engine == "expr":
-        hits = flat.where(contains_any_expr(F.col("_flat"), pats))
-    else:
-        scan = contains_any_udf(pats, engine=engine)
-        hits = flat.where(scan(F.col("_flat")))
-    return as_violations(
-        hits, CHECK_NAME, SEV_WARNING, detail=F.lit("matched confidential pattern")
+    # the condition lives in the fused doc scan (imported lazily: it
+    # imports this module)
+    from datachecker_spark.constraints import fused
+
+    return fused.only(
+        docs, "confidential", patterns=patterns, confidential_engine=engine
     )

@@ -1,32 +1,34 @@
-"""Fused row-level constraint passes: walk once, apply every check.
+"""Row-level checks: the one definition of each row check, run as fused scans.
 
 The reference's core design point is its stat cache — walk the tree ONCE and
 let all ~21 checks reuse the walk (/root/reference/src/modules/core.zig:
 225-241). run_suite already applies that to the derived columns; this module
 applies it to the row-level CHECKS themselves. Eleven of the suite's checks
-are pure row predicates at one of three granularities, and as separate
-union branches each re-scans (and re-decompresses) the cached corpus — the
-spans column alone was read five times per pass. Fused, each granularity is
+are pure row predicates at one of three granularities. Each granularity is
 ONE scan emitting an array of optional violation structs that explode into
 the shared contract:
 
 * doc-level   — empty/large/name-rules/name-length/timestamps/confidential
                 (reads doc_id, part, size, _flat, ts columns once)
 * ref-level   — path-length/temp/legacy over ONE explode of the media refs
-                (the legacy ext→description broadcast join becomes a map
-                literal lookup, still fully inside codegen)
-* span-level  — kind-consistency/json-validity over ONE posexplode
+                (the legacy ext→description lookup is a map literal, fully
+                inside codegen — no join)
+* span-level  — kind-consistency/json-validity over ONE posexplode of the
+                narrow `span_meta` column
 
-Measured motive (1M docs, local[16], warm cache): the eleven standalone
-branches cost ~12s of near-fixed per-branch time that did NOT shrink from
-4→16 cores (per-branch wall identical at both levels — fixed job overhead
-plus repeated columnar decompression, the serial+bandwidth floor of the
-suite); fused they are three branches.
+This module is the only place a row check's condition, severity and detail
+are written. The public per-check functions (stats.check_empty_docs,
+predicates.check_temp_refs, confidential.check_confidential, ...) are
+`only(docs, rule)`: their granularity's scan with every other rule off.
+Derived inputs come from fingerprint.annotate(), a no-op on the runner's
+annotated cache; a scan annotates only when a selected rule reads a derived
+column, so the timestamp rules run on frames without `spans`.
 
-Every condition/severity/detail expression here is copied verbatim from the
-standalone checks (constraints/stats.py, predicates.py, confidential.py),
-which remain the per-check public API; `tests/test_fused.py` asserts the
-fused output row-multiset equals the union of the standalone checks.
+Measured motive (1M docs, local[16], warm cache): as eleven separate union
+branches the checks cost ~12s of near-fixed per-branch time that did NOT
+shrink from 4→16 cores (fixed job overhead plus repeated columnar
+decompression, the serial+bandwidth floor of the suite); fused they are
+three branches.
 """
 
 from __future__ import annotations
@@ -37,8 +39,8 @@ from pyspark.sql import functions as F
 from datachecker_spark.constraints import confidential as conf
 from datachecker_spark.constraints import predicates as P
 from datachecker_spark.constraints import stats as S
-from datachecker_spark.contract import SEV_ERROR, SEV_WARNING
-from datachecker_spark.fingerprint import flattened_text
+from datachecker_spark.contract import SEV_ERROR, SEV_WARNING, empty_violations
+from datachecker_spark.fingerprint import annotate
 
 
 def _v(check: str, severity: str, cond: Column, detail: Column) -> Column:
@@ -87,14 +89,16 @@ def fused_doc_checks(
     patterns: list[str] | None = None,
     confidential_engine: str = "auto",
 ) -> DataFrame | None:
-    """One scan for every per-document check. Expressions match the
-    standalone checks exactly (see module docstring). Returns None when
-    every toggle is off."""
-    size = F.col("size") if "size" in docs.columns else S.doc_size("spans")
+    """One scan for every per-document check. Returns None when no rule
+    is selected (every toggle off, or timestamps alone without ts columns)."""
+    if empty_docs or large_docs or confidential:
+        docs = annotate(docs)
+    size = F.col("size")
     structs: list[Column] = []
     if empty_docs:
+        # size is NULL exactly when spans is NULL: no content either
         structs.append(
-            _v(S.CHECK_EMPTY, SEV_WARNING, size == 0,
+            _v(S.CHECK_EMPTY, SEV_WARNING, size.isNull() | (size == 0),
                F.lit("document has no text content"))
         )
     if large_docs:
@@ -145,10 +149,7 @@ def fused_doc_checks(
     if confidential:
         pats = conf.DEFAULT_PATTERNS if patterns is None else patterns
         engine = conf.resolve_engine(pats, confidential_engine)
-        flat = (
-            F.col("_flat") if "_flat" in docs.columns
-            else flattened_text("spans")
-        )
+        flat = F.col("_flat")
         if engine == "expr":
             hit = conf.contains_any_expr(flat, pats)
         else:
@@ -172,8 +173,7 @@ def fused_ref_checks(
 ) -> DataFrame | None:
     """One media-ref explode for every per-ref check. The legacy
     description lookup is a 110-entry map literal (element_at returns NULL
-    for absent keys), replacing the standalone check's broadcast join —
-    same rows, zero join."""
+    for absent keys) — no join."""
     if not (ref_path_length or temp_refs or legacy_refs):
         return None
     r = P.ref_rows(docs)
@@ -209,40 +209,14 @@ def fused_span_checks(
     kind_consistency: bool = True,
     json_spans: bool = True,
 ) -> DataFrame | None:
-    """One posexplode for every per-span check.
-
-    Reads the cached narrow `span_meta` column (annotate/span_meta_column)
-    when present — the span-level checks then never decompress the full
-    spans payload, which lets the runner exclude it from the cache. The
-    fallback derives the identical five fields from the raw spans (direct
-    callers on un-annotated frames; equality fused-vs-standalone is
-    asserted in tests/test_fused.py)."""
+    """One posexplode of the narrow cached `span_meta` column for every
+    per-span check — the span-level checks never decompress the full spans
+    payload, which lets the runner exclude it from the cache."""
     if not (kind_consistency or json_spans):
         return None
-    if "span_meta" in docs.columns:
-        s = docs.select(
-            "doc_id", "part", F.posexplode("span_meta").alias("pos", "m")
-        ).select("doc_id", "part", "pos", "m.*")
-    else:
-        s = docs.select(
-            "doc_id", "part", F.posexplode("spans").alias("pos", "span")
-        ).select(
-            "doc_id",
-            "part",
-            "pos",
-            F.col("span.kind").alias("kind"),
-            P.implied_format(F.col("span.text")).alias("implied"),
-            F.col("span.text").isNotNull().alias("has_text"),
-            F.col("span.media_ref").isNotNull().alias("has_ref"),
-            (
-                (
-                    (F.col("span.kind") == "json")
-                    | ((F.col("span.kind") == "text") & F.col("span.text").startswith("{"))
-                )
-                & F.col("span.text").isNotNull()
-                & F.from_json(F.col("span.text"), "map<string,string>").isNull()
-            ).alias("bad_json"),
-        )
+    s = annotate(docs).select(
+        "doc_id", "part", F.posexplode("span_meta").alias("pos", "m")
+    ).select("doc_id", "part", "pos", "m.*")
     structs: list[Column] = []
     if kind_consistency:
         bad_kind = ~F.col("kind").isin(P.ALLOWED_KINDS) | F.col("kind").isNull()
@@ -272,3 +246,24 @@ def fused_span_checks(
                F.format_string("span %d: invalid JSON payload", F.col("pos")))
         )
     return _explode_violations(s, structs)
+
+
+# every fused scan with the toggles it takes, in SuiteConfig's field names
+_SCANS = (
+    (fused_doc_checks, ("empty_docs", "large_docs", "name_rules",
+                        "name_length", "timestamps", "confidential")),
+    (fused_ref_checks, ("ref_path_length", "temp_refs", "legacy_refs")),
+    (fused_span_checks, ("kind_consistency", "json_spans")),
+)
+
+
+def only(docs: DataFrame, rule: str, **options) -> DataFrame:
+    """Rule `rule` alone: its granularity's fused scan with every other
+    toggle off — the body of each public per-check function. A scan that
+    selects nothing (timestamps without ts columns) yields the contract's
+    empty frame, never None."""
+    for scan, toggles in _SCANS:
+        if rule in toggles:
+            out = scan(docs, **{t: t == rule for t in toggles}, **options)
+            return empty_violations(docs.sparkSession) if out is None else out
+    raise ValueError(f"unknown row rule: {rule}")

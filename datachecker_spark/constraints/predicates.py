@@ -10,6 +10,10 @@ Reference analogs:
   magic-number mismatch src/modules/magic_numbers.zig:205-256 → declared
                         `kind` vs content prefix consistency
   JSON validity         src/modules/parser.zig:15-43 → from_json null test
+
+The check_* functions are one rule each of the fused ref/span/doc scans
+(constraints/fused.py, imported lazily: it imports this module), which
+combine the expressions defined here.
 """
 
 from __future__ import annotations
@@ -17,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datachecker_spark.contract import SEV_ERROR, SEV_WARNING, as_violations
+from datachecker_spark.fingerprint import annotate
 
 # --- name rules -------------------------------------------------------------
 
@@ -51,21 +55,18 @@ def name_violation_reason(name: Column) -> Column:
     )
 
 
-def check_doc_names(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    flagged = docs.select(
-        "doc_id", "part", name_violation_reason(F.col(id_col)).alias("_reason")
-    ).where(F.col("_reason").isNotNull())
-    return as_violations(
-        flagged, CHECK_NAME_RULES, SEV_WARNING, F.concat(F.lit("name rule: "), F.col("_reason"))
-    )
+def check_doc_names(docs: DataFrame) -> DataFrame:
+    """WARNING per doc_id breaking a name rule (name_violation_reason)."""
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "name_rules")
 
 
-def check_name_length(
-    docs: DataFrame, id_col: str = "doc_id", max_len: int = MAX_NAME_LEN
-) -> DataFrame:
-    flagged = docs.where(F.length(id_col) > max_len)
-    detail = F.format_string("name length %d > %d", F.length(id_col), F.lit(max_len))
-    return as_violations(flagged, CHECK_NAME_LEN, SEV_WARNING, detail)
+def check_name_length(docs: DataFrame, max_len: int = MAX_NAME_LEN) -> DataFrame:
+    """WARNING per doc_id longer than max_len."""
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "name_length", max_name_len=max_len)
 
 
 CHECK_REF_LEN = "ref_path_length"
@@ -78,12 +79,9 @@ def check_ref_path_length(
     """WARNING per media_ref whose full path length exceeds max_len — the
     reference's fullPathSize check (stats.zig:231-239) applied to the
     engine's path-like refs (check_name_length covers only doc_id)."""
-    r = ref_rows(docs)
-    flagged = r.where(F.length("ref") > max_len)
-    detail = F.format_string(
-        "ref path length %d > %d: %s", F.length("ref"), F.lit(max_len), F.col("ref")
-    )
-    return as_violations(flagged, CHECK_REF_LEN, SEV_WARNING, detail)
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "ref_path_length", max_path_len=max_len)
 
 
 # --- temp / legacy media_ref tags --------------------------------------------
@@ -152,8 +150,8 @@ TEMP_START_END = [
     (".z", ""), ("", "~"), ("#", "#"), ("~", ""), ("~", ".docx"),
     ("~$.", ""), ("~$", ".pptx"), ("temp", ""), ("tmp", ""),
 ]
-# legacy format → description (broadcast dimension; full parity with the
-# reference's 110-entry map, useless.zig:195-306)
+# legacy format → description (a map literal in the fused ref scan; full
+# parity with the reference's 110-entry map, useless.zig:195-306)
 LEGACY_FORMATS = {
     ".123": "Lotus 1-2-3", ".669": "Composer 669", ".8svx": "Amiga 8-bit sound",
     ".adf": "Amiga Disk File", ".aiff": "Audio Interchange File Format",
@@ -219,18 +217,10 @@ def _ext(ref: Column) -> Column:
 
 
 def ref_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, part, ref) per non-null media ref. Reads the cached `refs`
-    derived column when annotate() provided it — the ref checks then never
-    decompress the spans payload (fingerprint.DERIVED_COLUMNS rationale)."""
-    if "refs" in docs.columns:
-        return docs.select("doc_id", "part", F.explode("refs").alias("ref"))
-    refs = F.filter(
-        F.col("spans"), lambda s: (s["kind"] == "media") & s["media_ref"].isNotNull()
-    )
-    return docs.select(
-        "doc_id", "part",
-        F.explode(F.transform(refs, lambda s: s["media_ref"])).alias("ref"),
-    )
+    """(doc_id, part, ref) per non-null media ref, from the `refs` derived
+    column — the ref checks never decompress the spans payload
+    (fingerprint.DERIVED_COLUMNS rationale)."""
+    return annotate(docs).select("doc_id", "part", F.explode("refs").alias("ref"))
 
 
 def temp_ref_expr(ref: Column) -> Column:
@@ -254,24 +244,17 @@ def temp_ref_expr(ref: Column) -> Column:
 
 def check_temp_refs(docs: DataFrame) -> DataFrame:
     """WARNING per media_ref that looks like a temp/useless artifact."""
-    r = ref_rows(docs)
-    flagged = r.where(temp_ref_expr(F.col("ref")))
-    return as_violations(
-        flagged, CHECK_TEMP, SEV_WARNING, F.concat(F.lit("temp/useless ref: "), F.col("ref"))
-    )
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "temp_refs")
 
 
 def check_legacy_refs(docs: DataFrame) -> DataFrame:
-    """WARNING per media_ref in a legacy format; description from a broadcast
-    dimension join (the reference's ext→description map, useless.zig:195-306)."""
-    spark = docs.sparkSession
-    dim = spark.createDataFrame(
-        list(LEGACY_FORMATS.items()), ["ext", "description"]
-    )
-    r = ref_rows(docs).withColumn("ext", _ext(F.col("ref")))
-    flagged = r.join(F.broadcast(dim), "ext", "inner")
-    detail = F.format_string("legacy format %s (%s): %s", F.col("ext"), F.col("description"), F.col("ref"))
-    return as_violations(flagged, CHECK_LEGACY, SEV_WARNING, detail)
+    """WARNING per media_ref in a legacy format, with the format's
+    description (the reference's ext→description map, useless.zig:195-306)."""
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "legacy_refs")
 
 
 # --- declared-kind vs content consistency (magic numbers) ---------------------
@@ -346,26 +329,9 @@ def check_kind_consistency(docs: DataFrame) -> DataFrame:
     * media span carrying inline text, or text span carrying a media_ref
       (structural contradiction).
     """
-    s = docs.select(
-        "doc_id", "part", F.posexplode("spans").alias("pos", "span")
-    ).select("doc_id", "part", "pos", "span.*")
+    from datachecker_spark.constraints import fused
 
-    s = s.withColumn("_implied", implied_format(F.col("text")))
-
-    bad_kind = ~F.col("kind").isin(ALLOWED_KINDS) | F.col("kind").isNull()
-    text_is_binary = F.col("kind").isin("text", "json") & F.col("_implied").isNotNull() & ~F.col("_implied").isin("html")
-    media_has_text = (F.col("kind") == "media") & F.col("text").isNotNull()
-    text_has_ref = (F.col("kind") == "text") & F.col("media_ref").isNotNull()
-
-    reason = (
-        F.when(bad_kind, F.format_string("span %d: unknown kind '%s'", F.col("pos"), F.col("kind")))
-        .when(text_is_binary, F.format_string("span %d: declared %s but content is %s", F.col("pos"), F.col("kind"), F.col("_implied")))
-        .when(media_has_text, F.format_string("span %d: media span carries inline text", F.col("pos")))
-        .when(text_has_ref, F.format_string("span %d: text span carries media_ref", F.col("pos")))
-        .otherwise(F.lit(None))
-    )
-    flagged = s.withColumn("_reason", reason).where(F.col("_reason").isNotNull())
-    return as_violations(flagged, CHECK_KIND, SEV_ERROR, F.col("_reason"))
+    return fused.only(docs, "kind_consistency")
 
 
 # --- JSON span validity -------------------------------------------------------
@@ -374,20 +340,10 @@ CHECK_JSON = "json_validity"
 
 
 def check_json_spans(docs: DataFrame) -> DataFrame:
-    """ERROR per document with an unparseable json span. A span participates
+    """ERROR per unparseable json span. A span participates
     if kind='json' OR its text starts with '{'. Validity = from_json against
     an open map schema returns non-null (the reference parses the whole file
     and flags parse failure, parser.zig:15-43). Built-in, no UDF."""
-    s = docs.select("doc_id", "part", F.posexplode("spans").alias("pos", "span")).select(
-        "doc_id", "part", "pos", "span.*"
-    )
-    jsonish = (F.col("kind") == "json") | (
-        (F.col("kind") == "text") & F.col("text").startswith("{")
-    )
-    cand = s.where(jsonish & F.col("text").isNotNull())
-    parsed = cand.withColumn(
-        "_parsed", F.from_json(F.col("text"), "map<string,string>")
-    )
-    flagged = parsed.where(F.col("_parsed").isNull())
-    detail = F.format_string("span %d: invalid JSON payload", F.col("pos"))
-    return as_violations(flagged, CHECK_JSON, SEV_ERROR, detail)
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "json_spans")

@@ -6,6 +6,10 @@ One groupBy("part") pass computes the whole profile — the analog of the
 reference's stat cache amortizing a single walk across all checks: Catalyst
 evaluates every aggregate in a single partial+final hash aggregation over one
 scan, with column pruning keeping untouched span fields out of the read.
+
+The check_* functions are one rule each of the fused doc scan
+(constraints/fused.py, imported lazily: it imports this module), where
+their conditions are defined.
 """
 
 from __future__ import annotations
@@ -13,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datachecker_spark.contract import SEV_ERROR, SEV_WARNING, as_violations
-from datachecker_spark.fingerprint import doc_size, fingerprint, span_count
+from datachecker_spark.fingerprint import annotate
 
 CHECK_EMPTY = "empty_doc"
 CHECK_LARGE = "large_doc"
@@ -24,45 +27,13 @@ DEFAULT_LARGE_DOC_SIZE = 1_000_000  # chars; analog of LARGE_FILE_SIZE (config.z
 DEFAULT_MAX_AGE_DAYS = 365  # analog of LAST_ACCESS_TIME (~1y, config.zig:63)
 
 
-def _annotated(docs: DataFrame) -> DataFrame:
-    have = set(docs.columns)
-    text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
-    media_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "media")
-    # reuse runner-materialized derived columns when present (fingerprint.annotate)
-    size = F.col("size") if "size" in have else doc_size("spans")
-    n_spans = F.col("n_spans") if "n_spans" in have else span_count("spans")
-    fp = F.col("fp") if "fp" in have else fingerprint("spans")
-    n_media = F.col("n_media") if "n_media" in have else F.size(media_spans)
-    n_text = (
-        F.col("n_text_spans") if "n_text_spans" in have else F.size(text_spans)
-    )
-    n_null_text = (
-        F.col("n_null_text")
-        if "n_null_text" in have
-        else F.size(F.filter(text_spans, lambda s: s["text"].isNull()))
-    )
-    n_null_ref = (
-        F.col("n_null_ref")
-        if "n_null_ref" in have
-        else F.size(F.filter(media_spans, lambda s: s["media_ref"].isNull()))
-    )
-    return docs.select(
-        "doc_id",
-        "part",
-        size.alias("size"),
-        n_spans.alias("n_spans"),
-        fp.alias("fp"),
-        n_text.alias("n_text_spans"),
-        n_media.alias("n_media_spans"),
-        n_null_text.alias("n_null_text"),
-        n_null_ref.alias("n_null_ref"),
-    )
-
-
 def partition_profile(docs: DataFrame) -> DataFrame:
     """Per-partition column statistics: counts, null rates, min/max,
     HLL cardinality sketches (approx_count_distinct = HyperLogLog++)."""
-    a = _annotated(docs)
+    a = annotate(docs).select(
+        "doc_id", "part", "size", "n_spans", "fp", "n_text_spans",
+        F.col("n_media").alias("n_media_spans"), "n_null_text", "n_null_ref",
+    )
     return a.groupBy("part").agg(
         F.count("*").alias("n_docs"),
         F.sum((F.col("size") == 0).cast("long")).alias("n_empty_docs"),
@@ -84,34 +55,28 @@ def partition_profile(docs: DataFrame) -> DataFrame:
     )
 
 
-def _size_col(docs: DataFrame):
-    return F.col("size") if "size" in docs.columns else doc_size("spans")
-
-
 def check_empty_docs(docs: DataFrame) -> DataFrame:
-    """WARNING per document with no content (size==0 or no spans)."""
-    offenders = docs.where(_size_col(docs) == 0)
-    return as_violations(offenders, CHECK_EMPTY, SEV_WARNING, "document has no text content")
+    """WARNING per document with no text content: size 0, no spans, or a
+    NULL spans array."""
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "empty_docs")
 
 
 def check_large_docs(
     docs: DataFrame, threshold: int = DEFAULT_LARGE_DOC_SIZE
 ) -> DataFrame:
     """WARNING per document whose total text length exceeds the threshold."""
-    sized = docs.select("doc_id", "part", _size_col(docs).alias("size"))
-    offenders = sized.where(F.col("size") > threshold)
-    detail = F.format_string("size=%d exceeds threshold=%d", F.col("size"), F.lit(threshold))
-    return as_violations(offenders, CHECK_LARGE, SEV_WARNING, detail)
+    from datachecker_spark.constraints import fused
+
+    return fused.only(docs, "large_docs", large_doc_size=threshold)
 
 
 def check_timestamps(
-    docs: DataFrame,
-    *,
-    now=None,
-    max_age_days: int = DEFAULT_MAX_AGE_DAYS,
-    ts_cols: tuple[str, ...] = ("ingest_ts", "modified_ts"),
+    docs: DataFrame, *, now=None, max_age_days: int = DEFAULT_MAX_AGE_DAYS
 ) -> DataFrame:
-    """Timestamp sanity over the doc model's optional ts columns.
+    """Timestamp sanity over the doc model's optional ts columns
+    (ingest_ts, modified_ts).
 
     Reference analogs (/root/reference/src/modules/stats.zig):
       * last-access age — entry untouched for > LAST_ACCESS_TIME (~1y)
@@ -122,32 +87,10 @@ def check_timestamps(
         here: any ts column beyond `now`.
 
     `now` is a plan literal (string/py datetime), matching the reference's
-    sample-once semantics and keeping reruns deterministic; defaults to
-    current_timestamp() for ad-hoc use. Columns absent from the schema are
+    sample-once semantics and keeping reruns deterministic; None samples
+    the wall clock once, as a literal. Columns absent from the schema are
     skipped (the ts columns are optional in the input_hint model).
     """
-    present = [c for c in ts_cols if c in docs.columns]
-    if not present:
-        from datachecker_spark.contract import empty_violations
+    from datachecker_spark.constraints import fused
 
-        return empty_violations(docs.sparkSession)
-    now_c = F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
-    cutoff = now_c - F.expr(f"INTERVAL {int(max_age_days)} DAYS")
-    newest = F.greatest(*[F.col(c).cast("timestamp") for c in present])
-    any_future = F.lit(False)
-    for c in present:
-        any_future = any_future | (F.col(c).cast("timestamp") > now_c)
-
-    future = as_violations(
-        docs.where(any_future),
-        CHECK_FUTURE,
-        SEV_ERROR,
-        F.lit("timestamp in the future"),
-    )
-    stale = as_violations(
-        docs.where(~any_future & (newest < cutoff)),
-        CHECK_STALE,
-        SEV_WARNING,
-        F.format_string("not modified in over %d days", F.lit(int(max_age_days))),
-    )
-    return future.unionByName(stale)
+    return fused.only(docs, "timestamps", now=now, max_age_days=max_age_days)

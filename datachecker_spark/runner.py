@@ -52,6 +52,9 @@ class SuiteConfig:
 
     duplicates: bool = True
     unique_ids: bool = True
+    # the row-level rules, empty_docs through timestamps: each is a toggle of
+    # one of the three fused scans (constraints/fused.py), the only place
+    # their conditions are written
     empty_docs: bool = True
     large_docs: bool = True
     large_doc_size: int = stats.DEFAULT_LARGE_DOC_SIZE
@@ -108,14 +111,6 @@ class SuiteConfig:
     #              branch recomputation after churn.
     checkpoint_mode: str = "local"
     checkpoint_dir: str | None = None
-    # walk once, apply every row-level check (reference stat-cache design,
-    # core.zig:225-241, applied to the checks themselves): the eleven pure
-    # row-predicate checks run as THREE fused scans (doc/ref/span
-    # granularity, constraints/fused.py) instead of eleven union branches
-    # that each re-decompress the cached corpus. False = one branch per
-    # check (the standalone functions; same rows either way — asserted by
-    # tests/test_fused.py).
-    fused_rows: bool = True
 
     # checks whose verdicts depend on the WHOLE corpus, not one partition:
     # a duplicate group or repeated doc_id can span partitions, and drift
@@ -237,22 +232,17 @@ def _cache_can_drop_spans(
     """True when no enabled branch reads the raw `spans` payload, so the
     suite cache can exclude it entirely. With the derived columns present
     every family reads narrow cached columns (`span_meta` covers the
-    span-level checks); the two exceptions that still need the raw array:
-
-    * fused_rows=False with the standalone kind/json checks — those
-      posexplode `spans` directly;
-    * an integrity expectation table using algorithms beyond
-      xxhash64/sha256 — those recompute the canonical string from spans
-      (constraints/integrity._computed_column). The distinct-algo probe is
-      a tiny aggregate on the expectation table (verify_integrity runs the
-      same one).
+    span-level checks); the one exception that still needs the raw array
+    is an integrity expectation table using algorithms beyond
+    xxhash64/sha256 — those recompute the canonical string from spans
+    (constraints/integrity._computed_column). The distinct-algo probe is a
+    tiny aggregate on the expectation table (verify_integrity runs the
+    same one).
 
     Dropping `spans` halves the cached text bytes (`_flat` stays the single
     text copy) — cache_fill writes less, the union job decompresses less,
     and the whole suite's bytes-per-doc demand on the memory bus falls
     (the binding constraint in BASELINE.md's scaling accounting)."""
-    if not cfg.fused_rows and (cfg.kind_consistency or cfg.json_spans):
-        return False
     if cfg.integrity and expected_fingerprints is not None:
         algos = {
             r["algo"]
@@ -317,71 +307,39 @@ def run_suite(
         from datachecker_spark.session import sample_now_literal
 
         now = sample_now_literal()
-    if cfg.fused_rows:
-        # eleven row-level checks as THREE scans (constraints/fused.py)
-        parts.extend(
-            df
-            for df in (
-                fused.fused_doc_checks(
-                    docs,
-                    empty_docs=cfg.empty_docs,
-                    large_docs=cfg.large_docs,
-                    large_doc_size=cfg.large_doc_size,
-                    name_rules=cfg.name_rules,
-                    name_length=cfg.name_length,
-                    max_name_len=cfg.max_name_len,
-                    timestamps=cfg.timestamps and has_ts,
-                    now=now,
-                    max_age_days=cfg.max_age_days,
-                    confidential=cfg.confidential,
-                    patterns=cfg.confidential_patterns,
-                ),
-                fused.fused_ref_checks(
-                    docs,
-                    ref_path_length=cfg.ref_path_length,
-                    max_path_len=cfg.max_path_len,
-                    temp_refs=cfg.temp_refs,
-                    legacy_refs=cfg.legacy_refs,
-                ),
-                fused.fused_span_checks(
-                    docs,
-                    kind_consistency=cfg.kind_consistency,
-                    json_spans=cfg.json_spans,
-                ),
-            )
-            if df is not None
+    # the eleven row-level checks as THREE scans (constraints/fused.py)
+    parts.extend(
+        df
+        for df in (
+            fused.fused_doc_checks(
+                docs,
+                empty_docs=cfg.empty_docs,
+                large_docs=cfg.large_docs,
+                large_doc_size=cfg.large_doc_size,
+                name_rules=cfg.name_rules,
+                name_length=cfg.name_length,
+                max_name_len=cfg.max_name_len,
+                timestamps=cfg.timestamps and has_ts,
+                now=now,
+                max_age_days=cfg.max_age_days,
+                confidential=cfg.confidential,
+                patterns=cfg.confidential_patterns,
+            ),
+            fused.fused_ref_checks(
+                docs,
+                ref_path_length=cfg.ref_path_length,
+                max_path_len=cfg.max_path_len,
+                temp_refs=cfg.temp_refs,
+                legacy_refs=cfg.legacy_refs,
+            ),
+            fused.fused_span_checks(
+                docs,
+                kind_consistency=cfg.kind_consistency,
+                json_spans=cfg.json_spans,
+            ),
         )
-    else:
-        if cfg.empty_docs:
-            parts.append(stats.check_empty_docs(docs))
-        if cfg.large_docs:
-            parts.append(stats.check_large_docs(docs, threshold=cfg.large_doc_size))
-        if cfg.name_rules:
-            parts.append(predicates.check_doc_names(docs))
-        if cfg.name_length:
-            parts.append(predicates.check_name_length(docs, max_len=cfg.max_name_len))
-        if cfg.ref_path_length:
-            parts.append(
-                predicates.check_ref_path_length(docs, max_len=cfg.max_path_len)
-            )
-        if cfg.temp_refs:
-            parts.append(predicates.check_temp_refs(docs))
-        if cfg.legacy_refs:
-            parts.append(predicates.check_legacy_refs(docs))
-        if cfg.kind_consistency:
-            parts.append(predicates.check_kind_consistency(docs))
-        if cfg.json_spans:
-            parts.append(predicates.check_json_spans(docs))
-        if cfg.confidential:
-            parts.append(
-                confidential.check_confidential(
-                    docs, patterns=cfg.confidential_patterns
-                )
-            )
-        if cfg.timestamps and has_ts:
-            parts.append(
-                stats.check_timestamps(docs, now=now, max_age_days=cfg.max_age_days)
-            )
+        if df is not None
+    )
     if cfg.referential and media_catalog is not None:
         parts.append(referential.check_media_refs(docs, media_catalog))
     write_back = None

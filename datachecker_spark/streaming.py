@@ -4,10 +4,11 @@ incrementally, plus watermarked windowed per-partition verdict counts.
 The reference is batch-only (one snapshot walk); the engine adds streaming
 because an ingestion pipeline validates documents as they arrive. Design:
 
-* Row-local checks (name rules, kind consistency, JSON validity, size
-  predicates, confidential scan) are pure column expressions / Arrow UDFs —
-  they apply unchanged to a streaming DataFrame. `stream_violations` reuses
-  the SAME constraint functions as batch (no second implementation).
+* Row-local checks (size and name rules, ref tags, kind consistency, JSON
+  validity, confidential scan, timestamps) are pure column expressions /
+  Arrow UDFs — they apply unchanged to a streaming DataFrame.
+  `stream_violations` runs the SAME three fused scans as the batch suite
+  (constraints/fused.py), so it emits every row check run_suite does.
 * Per-partition rolling verdicts: event-time window + watermark over the
   violation stream (late data beyond the watermark is dropped, the Spark
   contract for state cleanup).
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datachecker_spark.constraints import confidential, predicates, stats
+from datachecker_spark.constraints import fused, stats
 
 
 def stream_violations(
@@ -35,27 +36,15 @@ def stream_violations(
 
     timestamp_now: fixed 'now' literal for the future/stale timestamp checks
     (the reference samples now once at startup); passing it keeps the
-    predicate deterministic across micro-batches. Omitted → checks skipped
-    (current_timestamp would re-evaluate per batch)."""
-    parts = [
-        stats.check_empty_docs(docs),
-        stats.check_large_docs(docs, threshold=large_doc_size),
-        predicates.check_doc_names(docs),
-        predicates.check_name_length(docs),
-        predicates.check_temp_refs(docs),
-        predicates.check_legacy_refs(docs),
-        predicates.check_kind_consistency(docs),
-        predicates.check_json_spans(docs),
-        confidential.check_confidential(docs, patterns=patterns),
-    ]
-    if timestamp_now is not None and any(
-        c in docs.columns for c in ("ingest_ts", "modified_ts")
-    ):
-        parts.append(stats.check_timestamps(docs, now=timestamp_now))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    predicate deterministic across micro-batches and query restarts.
+    Omitted → the timestamp checks are skipped."""
+    doc_level = fused.fused_doc_checks(
+        docs, large_doc_size=large_doc_size, patterns=patterns,
+        timestamps=timestamp_now is not None, now=timestamp_now,
+    )
+    return doc_level.unionByName(fused.fused_ref_checks(docs)).unionByName(
+        fused.fused_span_checks(docs)
+    )
 
 
 _WIN_SEP = "\x1f"  # cannot appear in real partition names

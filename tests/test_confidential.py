@@ -7,9 +7,9 @@ import pytest
 from datachecker_spark.constraints.confidential import (
     DEFAULT_PATTERNS,
     check_confidential,
-    flattened_text,
 )
 from datachecker_spark.datagen import make_docs
+from datachecker_spark.fingerprint import flattened_text
 
 
 def _fixture(spark):

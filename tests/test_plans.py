@@ -3,6 +3,8 @@ parquet scan; the ANN hot path is Arrow-vectorized)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -93,6 +95,42 @@ def test_ref_checks_prune_spans_from_cache(spark):
             for s in scans:
                 assert "spans" not in s, s
                 assert "refs" in s
+    finally:
+        docs.unpersist()
+
+
+def test_row_checks_run_without_spans(spark):
+    """Every public row-check function runs over an annotated cache with
+    the spans payload dropped (run_suite's cache): none reads `spans`, and
+    the legacy lookup is a map literal, not a broadcast join."""
+    from datachecker_spark.constraints import confidential, predicates, stats
+    from datachecker_spark.datagen import generate_documents
+    from datachecker_spark.fingerprint import annotate
+
+    docs = annotate(generate_documents(spark, 300, seed=5)).drop("spans").persist()
+    docs.count()
+    try:
+        checks = {
+            "check_empty_docs": stats.check_empty_docs(docs),
+            "check_large_docs": stats.check_large_docs(docs),
+            "check_timestamps": stats.check_timestamps(docs, now="2024-06-01"),
+            "check_doc_names": predicates.check_doc_names(docs),
+            "check_name_length": predicates.check_name_length(docs),
+            "check_ref_path_length": predicates.check_ref_path_length(docs),
+            "check_temp_refs": predicates.check_temp_refs(docs),
+            "check_legacy_refs": predicates.check_legacy_refs(docs),
+            "check_kind_consistency": predicates.check_kind_consistency(docs),
+            "check_json_spans": predicates.check_json_spans(docs),
+            "check_confidential": confidential.check_confidential(docs),
+        }
+        for name, df in checks.items():
+            df.count()
+            scans = [
+                line for line in _plan(df).splitlines() if "InMemoryTableScan" in line
+            ]
+            assert scans, name
+            assert not any(re.search(r"\bspans#", line) for line in scans), name
+        assert "BroadcastHashJoin" not in _plan(checks["check_legacy_refs"])
     finally:
         docs.unpersist()
 

@@ -51,6 +51,23 @@ def test_empty_and_large(spark):
     assert {r["doc_id"] for r in check_large_docs(docs, threshold=50).collect()} == {"b"}
 
 
+def test_null_spans_is_empty_doc(spark):
+    """A NULL spans array has NULL size; the doc still gets its empty_doc
+    verdict, from the per-check function and from run_suite."""
+    from datachecker_spark.datagen import DOCS_SCHEMA
+    from datachecker_spark.runner import SuiteConfig, run_suite
+
+    docs = spark.createDataFrame(
+        [("n", None, "p0"), ("e", [], "p0"), ("t", [("text", "x", None, 0)], "p0")],
+        DOCS_SCHEMA,
+    )
+    assert {r["doc_id"] for r in check_empty_docs(docs).collect()} == {"n", "e"}
+    res = run_suite(docs, config=SuiteConfig(timestamp_now="2024-06-01 00:00:00"))
+    flagged = res.violations.where(F.col("check") == "empty_doc").collect()
+    assert {r["doc_id"] for r in flagged} == {"n", "e"}
+    res.release()
+
+
 def test_unique_ids(spark):
     rows = [
         ("dup", [("text", "v1", None, 0)], "p0"),
