@@ -22,8 +22,8 @@ it stays JVM-side with partial aggregation; all statistics run on the small
 aggregate.
 
 JOB BUDGET (round-3 scaling fix): building a drift plan fires exactly THREE
-Spark jobs — the two corpus reductions (`obs`, `counts`), eagerly
-localCheckpointed because each appears several times downstream (parts
+Spark jobs — the two corpus reductions (`obs`, `counts`), each written
+once by cache.materialize because it appears several times downstream (parts
 totals, the distinct value/bucket set, the dense-grid join) and Catalyst
 demonstrably does NOT collapse those copies (join-key `isnotnull` pushdown
 and column pruning break subtree identity, so ReuseExchange never matches —
@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from datachecker_spark import cache
 from datachecker_spark.contract import SEV_WARNING, VIOLATION_COLS
 
 CHECK_CHI2 = "drift_chi2"
@@ -157,7 +158,6 @@ def chi_square_drift(
     *,
     alpha: float = 0.01,
     bonferroni: bool = True,
-    materialize=None,
 ) -> DataFrame:
     """Per-partition chi-square goodness-of-fit vs the median histogram.
 
@@ -165,9 +165,8 @@ def chi_square_drift(
     partition at per-test α flags ~α·n_parts clean partitions by chance;
     the family-wise correction keeps the false-alarm rate at α overall.
     The partition count enters the plan as a broadcast scalar (no job is
-    fired building this plan). materialize: df->df hook for the aggregate
-    checkpoint (runner.materializer — cluster deploys swap in reliable
-    checkpoint/persist); default localCheckpoint.
+    fired building this plan). The aggregate block is a LogicalRDD leaf of
+    the returned plan: dispose with cache.release(result).
     Returns (part, stat, dof, crit, drifted).
     """
     val = F.col(value) if isinstance(value, str) else value
@@ -177,11 +176,9 @@ def chi_square_drift(
     # the corpus reduction happens exactly once: obs is read by parts /
     # values / the dense join, and Catalyst does NOT collapse those copies
     # (see module docstring). Release is DETERMINISTIC, not GC-based (the
-    # ContextCleaner path is dead from Python — cache.py): the runner's
-    # _mat_track hook records this block and run_suite releases it as soon
-    # as the final drift block is materialized. The runner runs this whole
-    # build on a background thread.
-    obs = (materialize or (lambda d: d.localCheckpoint(eager=True)))(obs)
+    # ContextCleaner path is dead from Python — cache.py): check_drift
+    # releases this block once its own result is materialized.
+    obs = cache.materialize(obs)
     parts = obs.groupBy("part").agg(F.sum("a").alias("n_part"))
     values = obs.select("v").distinct()
     # dense part×value grid: absent cells are real zeros in the test
@@ -247,7 +244,6 @@ def ks_drift(
     grid_size: int = 128,
     grid: str = "percentile",
     bonferroni: bool = True,
-    materialize=None,
 ) -> DataFrame:
     """Per-partition approximate KS vs the median ECDF across partitions.
     bonferroni: family-wise α correction across partitions (see chi_square_drift).
@@ -285,8 +281,8 @@ def ks_drift(
         F.count("*").alias("c")
     )
     # one corpus scan total after the grid pass; all ECDF math reads the
-    # tiny (n_parts × grid) aggregate (localCheckpoint: see chi_square_drift)
-    counts = (materialize or (lambda d: d.localCheckpoint(eager=True)))(counts)
+    # tiny (n_parts × grid) aggregate (checkpoint: see chi_square_drift)
+    counts = cache.materialize(counts)
     parts = counts.groupBy("part").agg(F.sum("c").alias("n_part"))
     buckets = counts.select("b").distinct()
     dense = (
@@ -329,7 +325,6 @@ def psi_drift(
     threshold: float = 0.2,
     per_octave: int = 4,
     eps: float = 1e-6,
-    materialize=None,
 ) -> DataFrame:
     """Per-partition Population Stability Index vs the median histogram.
 
@@ -364,7 +359,7 @@ def psi_drift(
     counts = base.select("part", bucket.alias("b")).groupBy("part", "b").agg(
         F.count("*").alias("c")
     )
-    counts = (materialize or (lambda d: d.localCheckpoint(eager=True)))(counts)
+    counts = cache.materialize(counts)
     parts = counts.groupBy("part").agg(F.sum("c").alias("n_part"))
     buckets = counts.select("b").distinct()
     dense = (
@@ -404,15 +399,15 @@ def check_drift(
     psi: bool = False,
     psi_threshold: float = 0.2,
     psi_per_octave: int = 4,
-    materialize=None,
 ) -> DataFrame:
-    """Violations (doc_id NULL, partition-scoped) for drifted partitions.
-    materialize: optional df->df hook threaded to the stat builders'
-    aggregate checkpoints (see runner.materializer). psi=True additionally
-    scores the numeric column with the Population Stability Index
-    (psi_drift — the fixed-threshold monitoring score alongside the
-    significance-tested KS; one extra reduction of the same cached column,
-    overlapped with the rest of the drift build by the runner)."""
+    """Violations (doc_id NULL, partition-scoped) for drifted partitions,
+    as one materialized block: the stat builders' aggregate blocks are
+    released before returning, so the caller disposes of the result alone
+    (cache.release). psi=True additionally scores the numeric column with
+    the Population Stability Index (psi_drift — the fixed-threshold
+    monitoring score alongside the significance-tested KS; one extra
+    reduction of the same cached column, overlapped with the rest of the
+    drift build by the runner)."""
     spark = docs.sparkSession
     outs = []
 
@@ -426,9 +421,7 @@ def check_drift(
         ).select(*VIOLATION_COLS)
 
     if categorical is not None:
-        chi = chi_square_drift(
-            docs, categorical, alpha=alpha, materialize=materialize
-        ).where("drifted")
+        chi = chi_square_drift(docs, categorical, alpha=alpha).where("drifted")
         outs.append(
             v(chi, CHECK_CHI2, F.format_string("chi2=%s > crit=%s (dof=%d)",
                                                F.col("stat").cast("string"),
@@ -439,9 +432,7 @@ def check_drift(
         # suite path uses the deterministic log grid: one scan, no
         # driver-blocking percentile job per pass (standalone ks_drift keeps
         # the percentile default for data on unknown scales)
-        ks = ks_drift(
-            docs, numeric, alpha=alpha, grid="log", materialize=materialize
-        ).where("drifted")
+        ks = ks_drift(docs, numeric, alpha=alpha, grid="log").where("drifted")
         outs.append(
             v(ks, CHECK_KS, F.format_string("ks=%s > crit=%s (n=%d)",
                                             F.col("ks").cast("string"),
@@ -450,8 +441,7 @@ def check_drift(
         )
     if psi and numeric is not None:
         ps = psi_drift(
-            docs, numeric, threshold=psi_threshold,
-            per_octave=psi_per_octave, materialize=materialize,
+            docs, numeric, threshold=psi_threshold, per_octave=psi_per_octave
         ).where("drifted")
         outs.append(
             v(ps, CHECK_PSI, F.format_string("psi=%s > threshold=%s (n=%d)",
@@ -462,8 +452,11 @@ def check_drift(
     if not outs:
         from datachecker_spark.contract import empty_violations
 
-        return empty_violations(spark)
+        return cache.materialize(empty_violations(spark))
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    return out
+    try:
+        return cache.materialize(out)
+    finally:
+        cache.release(out)

@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datachecker_spark import cache
 from datachecker_spark.contract import SEV_CHECK, SEV_ERROR, VIOLATION_COLS
 from datachecker_spark.fingerprint import canonical_string, fingerprint
 
@@ -241,9 +242,8 @@ def verify_integrity(
     expected: DataFrame,
     *,
     include_missing: bool = True,
-    materialize=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (violations, write_back).
+    """Returns (violations, write_back), each one materialized block.
 
     violations: ERROR rows for hash mismatches (plus, when include_missing,
     corpus-level rows for expectations whose doc_id is absent — see
@@ -252,14 +252,14 @@ def verify_integrity(
     write_back: (doc_id, algo, expected_hash=computed) rows the caller merges
     into the expectation table (the reference writes the sidecar in place).
 
-    materialize (df -> df, the runner's checkpoint seam — same convention as
-    textops/graph): when provided, the expectation join is narrowed to the
-    six fields the verdicts need and materialized ONCE; the violation
-    branches AND write_back then read the same block instead of each
-    re-running the corpus-scale join + hash compute (write_back's separate
-    evaluation was a level-independent ~4-7s serial tail in run_suite's
-    metrics phase — an Amdahl cap on N→4N scaling). The caller owns block
-    release once both outputs are materialized."""
+    The expectation join is narrowed to the six fields the verdicts need
+    and materialized ONCE; the violation branches AND write_back then read
+    the same block instead of each re-running the corpus-scale join + hash
+    compute (write_back's separate evaluation was a level-independent
+    ~4-7s serial tail in run_suite's metrics phase — an Amdahl cap on N→4N
+    scaling). The join block is released before returning, so the caller
+    disposes of the two results alone (cache.release(violations,
+    write_back))."""
     exp = expected.select("doc_id", "algo", "expected_hash")
     # tiny aggregate: compile only the hash branches the table actually uses
     algos_present = sorted(
@@ -280,10 +280,9 @@ def verify_integrity(
     # doc present iff the docs side matched (part is never NULL for real docs)
     j = j.withColumn("_present", F.col("part").isNotNull())
     j = j.withColumn("_computed", _computed_column(comp_side, algos_present))
-    if materialize is not None:
-        j = materialize(
-            j.select("doc_id", "algo", "expected_hash", "part", "_present", "_computed")
-        )
+    j = cache.materialize(
+        j.select("doc_id", "algo", "expected_hash", "part", "_present", "_computed")
+    )
 
     supported = F.col("algo").isin(list(SUPPORTED_ALGOS))
     create = j.where(
@@ -332,4 +331,7 @@ def verify_integrity(
     write_back = create.select(
         "doc_id", "algo", F.col("_computed").alias("expected_hash")
     )
-    return violations, write_back
+    try:
+        return cache.materialize(violations), cache.materialize(write_back)
+    finally:
+        cache.release(j)

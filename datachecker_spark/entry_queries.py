@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from datachecker_spark import cache
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -750,7 +752,7 @@ def minhash_containment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
-    shared = shingle_sets(docs).localCheckpoint(eager=False)
+    shared = cache.materialize(shingle_sets(docs))
     lsh = minhash_near_dup_pairs(docs, threshold=0.2, sets=shared)
     exact = ngram_jaccard_pairs(
         docs, threshold=0.2, hash_shingles=True, candidates="prefix", sets=shared
@@ -808,10 +810,8 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    exact = (
-        cosine_topk(emb, queries, k=10)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+    exact = cache.materialize(
+        cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
     )
     total = exact.agg(F.count("*").alias("n_exact"))
 

@@ -25,9 +25,9 @@ Scale notes (10^12-doc table, O(dup rate x docs) edges):
   collected.
 * Edge lists shrink monotonically toward the star form, so later rounds are
   cheaper than earlier ones.
-* Each round is materialized through the caller's `materialize` seam (the
-  same hook runner.SuiteConfig.checkpoint_mode threads into textops/drift),
-  cutting the iterative lineage — without it the plan doubles per round.
+* Each round is written once by cache.materialize, cutting the iterative
+  lineage — without it the plan doubles per round — and the previous
+  round's blocks are released as soon as the next round's exist.
 * Fixpoint detection is one exact star-forest aggregate per round (a driver
   scalar, not a collect of data) — checked BEFORE each round, so convergence
   costs zero redundant confirmation rounds and a false fixpoint is
@@ -36,14 +36,10 @@ Scale notes (10^12-doc table, O(dup rate x docs) edges):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datachecker_spark import cache
-
-Materializer = Callable[[DataFrame], DataFrame]
 
 
 def _canon(df: DataFrame, a: str, b: str) -> DataFrame:
@@ -68,16 +64,9 @@ def _is_star_forest(edges: DataFrame) -> bool:
     detects a fixpoint by watching a round change NOTHING, i.e. after one
     redundant round of two stars + two joins) and it is exact — no
     hash-collision early-stop probability to price, no post-loop assertion
-    needed. This action is also what materializes the round's lazy
-    localCheckpoint, so it costs no extra job.
+    needed. `edges` is a materialized round, so the check reads blocks.
     """
-    # SINGLE scan of `edges` (explode, not self-union): the first check of a
-    # round runs against a not-yet-materialized lazy localCheckpoint, and a
-    # plan with two scans of an unmaterialized checkpoint computes its
-    # upstream (the whole similarity pipeline, on round 0) TWICE in one job
-    # — measured +8s on dedup_e2e at sf0.1. Every later double-scan in the
-    # loop (sym, comp read-out) runs after this action has populated the
-    # blocks, so only the check itself needs the single-scan form.
+    # one scan of `edges`: each edge explodes into its two node roles
     node_roles = edges.select(
         F.explode(
             F.array(
@@ -126,7 +115,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    materialize: Materializer | None = None,
     max_iterations: int = 50,
 ) -> DataFrame:
     """Connected components of an undirected edge list -> (node, cluster_id).
@@ -152,17 +140,13 @@ def connected_components(
     Fixpoint = the edge set is exactly {(min(C), x) : x in C \\ min(C)} per
     component C, read out directly as the assignment.
     """
-    mat = materialize or (lambda d: d.localCheckpoint(eager=False))
-
     # ids keep their input type: the algorithm needs only equality and a
     # total order, both of which Spark's least/greatest/min give every
     # orderable type — casting to long would crash (ANSI) or NULL-out
     # (non-ANSI) the engine's own string doc_ids
-    e = _canon(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u", "v"
+    e = cache.materialize(
+        _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u", "v")
     )
-    e = mat(e)
-    prev: DataFrame | None = None
     converged = False
     try:
         # up to max_iterations star ROUNDS: convergence produced by round k is
@@ -170,31 +154,28 @@ def connected_components(
         # round needs one extra checking pass — and a failed check there
         # raises before building a round nobody would read.
         for rounds in range(max_iterations + 1):
-            # Exact fixpoint test first — also the action that materializes
-            # the current round's lazy checkpoint; only after it completes is
-            # the PREVIOUS round's block set safe to release (e's checkpoint
-            # reads prev's blocks until then). Checking at the top of the
-            # round costs no confirmation round of two stars + two joins, and
-            # an already-star input (e.g. exact-duplicate groups keyed to
-            # their min) converges with ZERO star rounds.
+            # Exact fixpoint test first: checking at the top of the round
+            # costs no confirmation round of two stars + two joins, and an
+            # already-star input (e.g. exact-duplicate groups keyed to their
+            # min) converges with ZERO star rounds.
             converged = _is_star_forest(e)
-            if prev is not None:
-                cache.release(prev)
-                prev = None
             if converged:
                 break
             if rounds == max_iterations:
                 raise RuntimeError(
                     f"connected_components did not converge in {max_iterations} rounds"
                 )
-            prev = e
-            e = mat(_star_round(e))
+            # the next round's blocks exist once materialize returns, so
+            # the round they were computed from is no longer read
+            nxt = cache.materialize(_star_round(e))
+            cache.release(e)
+            e = nxt
     finally:
         # any exit but convergence (the raise above, a failed job) leaves no
         # result to carry the blocks, so release them here; on convergence
         # e's blocks back the returned plan
         if not converged:
-            cache.release(prev, e)
+            cache.release(e)
 
     # no post-loop assertion needed: the loop exits only on the EXACT
     # star-forest test, so a split-cluster false fixpoint is impossible by
@@ -220,7 +201,6 @@ def dedup_clusters(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    materialize: Materializer | None = None,
 ) -> DataFrame:
     """Near-dup pairs -> (doc_id, cluster_id, cluster_size).
 
@@ -230,7 +210,7 @@ def dedup_clusters(
     the canonical minimum, drop the rest), matching the reference's
     keep-first-of-group semantics on hash groups.
     """
-    comp = connected_components(pairs, src, dst, materialize)
+    comp = connected_components(pairs, src, dst)
     sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(sizes, "cluster_id")

@@ -21,6 +21,7 @@ Iceberg table becomes partition pruning (completed partitions are never read).
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,21 +98,6 @@ class SuiteConfig:
     timestamps: bool = True
     timestamp_now: str | None = None
     max_age_days: int = stats.DEFAULT_MAX_AGE_DAYS
-    # how intermediate results (violations union, drift aggregates, profile,
-    # metrics, write-back) are materialized — the cluster-deploy seam:
-    #   "local"    localCheckpoint: executor-resident blocks, lineage
-    #              TRUNCATED — fastest, but blocks die with their executor
-    #              (fine for local[N] and for clusters with no
-    #              executor churn; the default).
-    #   "reliable" checkpoint() under checkpoint_dir (HDFS/S3/DBFS on a real
-    #              cluster): blocks survive any executor loss.
-    #   "persist"  persist(MEMORY_AND_DISK)+count: lineage KEPT, so a lost
-    #              block recomputes from source instead of failing the job —
-    #              no shared storage needed, at the cost of possible
-    #              branch recomputation after churn.
-    checkpoint_mode: str = "local"
-    checkpoint_dir: str | None = None
-
     # checks whose verdicts depend on the WHOLE corpus, not one partition:
     # a duplicate group or repeated doc_id can span partitions, and drift
     # compares partitions against each other. These cannot be resumed
@@ -179,30 +165,6 @@ class SuiteConfig:
         if self.timestamps:
             names += [stats.CHECK_FUTURE, stats.CHECK_STALE]
         return names
-
-
-def materializer(cfg: "SuiteConfig", spark: SparkSession):
-    """df -> materialized df, per cfg.checkpoint_mode (see SuiteConfig)."""
-    if cfg.checkpoint_mode == "local":
-        return lambda df: df.localCheckpoint(eager=True)
-    if cfg.checkpoint_mode == "reliable":
-        if cfg.checkpoint_dir:
-            spark.sparkContext.setCheckpointDir(cfg.checkpoint_dir)
-        elif spark.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint_mode='reliable' needs checkpoint_dir "
-                "(or a pre-set SparkContext checkpoint dir)"
-            )
-        return lambda df: df.checkpoint(eager=True)
-    if cfg.checkpoint_mode == "persist":
-
-        def _persist(df: DataFrame) -> DataFrame:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()
-            return df
-
-        return _persist
-    raise ValueError(f"unknown checkpoint_mode: {cfg.checkpoint_mode}")
 
 
 @dataclass
@@ -282,243 +244,231 @@ def run_suite(
     (/root/reference/src/modules/core.zig:225-241) — applied to derived
     columns, not just rows."""
     cfg = config or SuiteConfig()
-    mat = materializer(cfg, docs.sparkSession)
     t = timings if timings is not None else {}
     t0 = time.perf_counter()
     docs = annotate(docs)
     if "spans" in docs.columns and _cache_can_drop_spans(cfg, expected_fingerprints):
         docs = docs.drop("spans")
     docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    docs.count()
-    t["cache_fill"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-
-    parts: list[DataFrame] = []
-    if cfg.duplicates:
-        parts.append(duplicates.check_duplicates(docs, n_salts=cfg.n_salts))
-    if cfg.unique_ids:
-        parts.append(uniqueness.check_unique_ids(docs, n_salts=cfg.n_salts))
-    has_ts = any(c in docs.columns for c in ("ingest_ts", "modified_ts"))
-    # sample 'now' once per run (reference: once at process startup,
-    # src/main.zig:399-403) unless the config pins a literal — a
-    # current_timestamp() column would re-evaluate per task/batch
-    now = cfg.timestamp_now
-    if cfg.timestamps and has_ts and now is None:
-        from datachecker_spark.session import sample_now_literal
-
-        now = sample_now_literal()
-    # the eleven row-level checks as THREE scans (constraints/fused.py)
-    parts.extend(
-        df
-        for df in (
-            fused.fused_doc_checks(
-                docs,
-                empty_docs=cfg.empty_docs,
-                large_docs=cfg.large_docs,
-                large_doc_size=cfg.large_doc_size,
-                name_rules=cfg.name_rules,
-                name_length=cfg.name_length,
-                max_name_len=cfg.max_name_len,
-                timestamps=cfg.timestamps and has_ts,
-                now=now,
-                max_age_days=cfg.max_age_days,
-                confidential=cfg.confidential,
-                patterns=cfg.confidential_patterns,
-            ),
-            fused.fused_ref_checks(
-                docs,
-                ref_path_length=cfg.ref_path_length,
-                max_path_len=cfg.max_path_len,
-                temp_refs=cfg.temp_refs,
-                legacy_refs=cfg.legacy_refs,
-            ),
-            fused.fused_span_checks(
-                docs,
-                kind_consistency=cfg.kind_consistency,
-                json_spans=cfg.json_spans,
-            ),
-        )
-        if df is not None
-    )
-    if cfg.referential and media_catalog is not None:
-        parts.append(referential.check_media_refs(docs, media_catalog))
-    write_back = None
-    if cfg.integrity_missing and expected_fingerprints is not None:
-        parts.append(integrity.check_missing_expectations(docs, expected_fingerprints))
-    if cfg.partition_sizes:
-        parts.append(
-            diraggs.check_partition_sizes(
-                docs, expected_parts=expected_parts, max_items=cfg.max_items_per_partition
-            )
-        )
-
-    # drift + profile run CONCURRENTLY with the main violations job on
-    # background threads (Spark job submission is thread-safe; this is what
-    # a cluster's scheduler does naturally when independent jobs are
-    # queued). Rationale, measured at 2M docs: drift's builders fire three
-    # small driver-blocking jobs (two aggregate checkpoints + the KS
-    # percentile grid) and the profile is another; run inline they serialize
-    # into a core-count-independent ~O(10s) floor per pass — the largest
-    # engine-owned term in the round-2 N→4N scaling gap. Overlapped, their
-    # tasks fill scheduler gaps in the big union job and the driver's
-    # critical path never blocks on them.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # drift + profile + integrity run CONCURRENTLY with the main violations
+    # job on background threads (Spark job submission is thread-safe; this
+    # is what a cluster's scheduler does naturally when independent jobs
+    # are queued). Rationale, measured at 2M docs: drift's builders fire
+    # three small driver-blocking jobs (two aggregate checkpoints + the KS
+    # percentile grid) and the profile is another; run inline they
+    # serialize into a core-count-independent ~O(10s) floor per pass — the
+    # largest engine-owned term in the round-2 N→4N scaling gap.
+    # Overlapped, their tasks fill scheduler gaps in the big union job and
+    # the driver's critical path never blocks on them.
     pool = ThreadPoolExecutor(max_workers=3)
-    drift_fut = None
-    # drift's internal obs/counts checkpoints are consumed entirely within
-    # this call — track them so they're released (cache.py: GC never
-    # reclaims checkpoint blocks from Python) as soon as the final drift
-    # block exists. Only the drift future's thread appends; no lock needed.
-    drift_intermediates: list[DataFrame] = []
-    if cfg.drift:
-        # both drift inputs are materialized derived columns — the drift
-        # aggregations read two cached int columns, never the span payloads
-        def _mat_track(d: DataFrame) -> DataFrame:
-            d = mat(d)
-            drift_intermediates.append(d)
-            return d
+    futures: list[Future] = []
+    held: list[DataFrame] = []  # blocks this thread has materialized
+    try:
+        docs.count()
+        t["cache_fill"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
 
-        def _drift_job():
-            s0 = time.perf_counter()
-            has_media = (F.col("n_media") > 0).cast("int")
-            d = drift.check_drift(
-                docs, categorical=has_media, numeric=F.col("size"),
-                alpha=cfg.drift_alpha, psi=cfg.drift_psi,
-                psi_threshold=cfg.psi_threshold,
-                psi_per_octave=cfg.psi_per_octave, materialize=_mat_track,
+        parts: list[DataFrame] = []
+        if cfg.duplicates:
+            parts.append(duplicates.check_duplicates(docs, n_salts=cfg.n_salts))
+        if cfg.unique_ids:
+            parts.append(uniqueness.check_unique_ids(docs, n_salts=cfg.n_salts))
+        has_ts = any(c in docs.columns for c in ("ingest_ts", "modified_ts"))
+        # sample 'now' once per run (reference: once at process startup,
+        # src/main.zig:399-403) unless the config pins a literal — a
+        # current_timestamp() column would re-evaluate per task/batch
+        now = cfg.timestamp_now
+        if cfg.timestamps and has_ts and now is None:
+            from datachecker_spark.session import sample_now_literal
+
+            now = sample_now_literal()
+        # the eleven row-level checks as THREE scans (constraints/fused.py)
+        parts.extend(
+            df
+            for df in (
+                fused.fused_doc_checks(
+                    docs,
+                    empty_docs=cfg.empty_docs,
+                    large_docs=cfg.large_docs,
+                    large_doc_size=cfg.large_doc_size,
+                    name_rules=cfg.name_rules,
+                    name_length=cfg.name_length,
+                    max_name_len=cfg.max_name_len,
+                    timestamps=cfg.timestamps and has_ts,
+                    now=now,
+                    max_age_days=cfg.max_age_days,
+                    confidential=cfg.confidential,
+                    patterns=cfg.confidential_patterns,
+                ),
+                fused.fused_ref_checks(
+                    docs,
+                    ref_path_length=cfg.ref_path_length,
+                    max_path_len=cfg.max_path_len,
+                    temp_refs=cfg.temp_refs,
+                    legacy_refs=cfg.legacy_refs,
+                ),
+                fused.fused_span_checks(
+                    docs,
+                    kind_consistency=cfg.kind_consistency,
+                    json_spans=cfg.json_spans,
+                ),
             )
-            d = mat(d)
-            t["drift_total"] = round(time.perf_counter() - s0, 2)
-            return d
+            if df is not None
+        )
+        if cfg.referential and media_catalog is not None:
+            parts.append(referential.check_media_refs(docs, media_catalog))
+        if cfg.integrity_missing and expected_fingerprints is not None:
+            parts.append(integrity.check_missing_expectations(docs, expected_fingerprints))
+        if cfg.partition_sizes:
+            parts.append(
+                diraggs.check_partition_sizes(
+                    docs, expected_parts=expected_parts, max_items=cfg.max_items_per_partition
+                )
+            )
 
-        drift_fut = pool.submit(_drift_job)
-
-    # profile's per-part doc counts feed the metrics grid so the metrics
-    # pass never re-scans the corpus
-    def _profile_job():
-        s0 = time.perf_counter()
-        p = mat(stats.partition_profile(docs))
-        t["profile_total"] = round(time.perf_counter() - s0, 2)
-        return p
-
-    profile_fut = pool.submit(_profile_job)
-
-    # integrity runs like drift: a background job whose expectation join +
-    # hash compute is materialized ONCE (verify_integrity's materialize
-    # seam), with the violation rows AND write_back derived from the same
-    # block. Previously the violations union computed the join once and
-    # mat(write_back) re-ran it SERIALLY after the union — a
-    # level-independent ~4-7s tail at 4M docs that capped N→4N efficiency
-    # (Amdahl), and 2× the join work. The join block is released inside the
-    # job once both outputs are materialized.
-    integrity_fut = None
-    if cfg.integrity and expected_fingerprints is not None:
-
-        def _integrity_job():
-            s0 = time.perf_counter()
-            blocks: list[DataFrame] = []
-
-            def _mt(d: DataFrame) -> DataFrame:
-                d = mat(d)
-                blocks.append(d)
+        drift_fut = None
+        if cfg.drift:
+            # both drift inputs are materialized derived columns — the drift
+            # aggregations read two cached int columns, never the span
+            # payloads. check_drift returns one block and has already
+            # released its aggregate intermediates.
+            def _drift_job():
+                s0 = time.perf_counter()
+                has_media = (F.col("n_media") > 0).cast("int")
+                d = drift.check_drift(
+                    docs, categorical=has_media, numeric=F.col("size"),
+                    alpha=cfg.drift_alpha, psi=cfg.drift_psi,
+                    psi_threshold=cfg.psi_threshold,
+                    psi_per_octave=cfg.psi_per_octave,
+                )
+                t["drift_total"] = round(time.perf_counter() - s0, 2)
                 return d
 
-            v, wb = integrity.verify_integrity(
-                docs, expected_fingerprints, include_missing=False,
-                materialize=_mt,
-            )
-            v, wb = mat(v), mat(wb)
-            cache.release(*blocks)
-            t["integrity_total"] = round(time.perf_counter() - s0, 2)
-            return v, wb
+            drift_fut = pool.submit(_drift_job)
+            futures.append(drift_fut)
 
-        integrity_fut = pool.submit(_integrity_job)
+        # profile's per-part doc counts feed the metrics grid so the metrics
+        # pass never re-scans the corpus
+        def _profile_job():
+            s0 = time.perf_counter()
+            p = cache.materialize(stats.partition_profile(docs))
+            t["profile_total"] = round(time.perf_counter() - s0, 2)
+            return p
 
-    t["branch_build"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    # drift-only configs leave the branch list empty — the violations union
-    # then consists solely of the drift future's block
-    violations = None
-    if parts:
-        violations = parts[0]
-        for p in parts[1:]:
-            violations = violations.unionByName(p)
-    # the union of ~18 branches carries one output partition per branch
-    # partition (branches × shuffle.partitions ≈ thousands of tiny tasks);
-    # in local mode the driver's single-threaded scheduler at ~ms/task then
-    # dominates wall time and caps scaling (measured: the union job flat at
-    # ~20s from 8→32 cores while the content pass scaled 2.3×). Coalesce to
-    # a small multiple of the executor count: still ≥2 waves of parallelism,
-    # 64× fewer task launches. (narrow — no extra shuffle)
-    # 4× (not 2×): the coalesced tasks are UNEVEN — each fuses different
-    # branch mixes — and stage-level instrumentation at 8 cores showed the
-    # checkpoint stage's 16-task/2-wave shape leaving a straggler tail
-    # (utilization 0.79); 4 waves of half-size tasks smooth it while task
-    # launches stay ~100× below the un-coalesced flood
-    n_out = max(4 * docs.sparkSession.sparkContext.defaultParallelism, 16)
-    if violations is not None:
-        violations = violations.coalesce(n_out)
-    # violations feed both the sink and the metrics aggregation. Materialize
-    # the (small) result ONCE, eagerly, through the configured seam
-    # (localCheckpoint by default: truncates the 18-branch union lineage so
-    # the sink write and the metrics aggregation both read materialized
-    # rows). (A lazy .persist() is unreliable here — when the first action
-    # is a DataFrame *write*, the cache is not populated and the metrics
-    # pass re-evaluated every branch, doubling suite wall time with high
-    # variance; the "persist" mode counts eagerly for the same reason.)
-    if violations is not None:
-        violations = mat(violations)
-    t["union_mat"] = round(time.perf_counter() - t0, 2)
-    if drift_fut is not None:
-        # both sides are materialized blocks; the union itself is lazy and
-        # cheap to re-read from the sink write AND the metrics aggregation
-        d = drift_fut.result()
-        violations = d if violations is None else violations.unionByName(d)
-        # the final drift block is materialized — its obs/counts inputs
-        # are now pure insurance against a recomputation that can't happen
-        cache.release(*drift_intermediates)
-    if integrity_fut is not None:
-        iv, write_back = integrity_fut.result()
-        violations = iv if violations is None else violations.unionByName(iv)
-    if violations is None:  # every family disabled: empty, stable schema
-        from datachecker_spark.contract import empty_violations
+        profile_fut = pool.submit(_profile_job)
+        futures.append(profile_fut)
 
-        violations = mat(empty_violations(docs.sparkSession))
-    t["violations_job"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
+        # integrity runs like drift: a background job. verify_integrity
+        # derives the violation rows AND write_back from one materialized
+        # join block (its docstring has the measured reason).
+        integrity_fut = None
+        if cfg.integrity and expected_fingerprints is not None:
 
-    # metrics/profile are per-partition-sized; materialize them eagerly too so
-    # the annotated cache can be released before returning (no cache leak
-    # across repeated run_suite calls in a long-lived session). Cluster
-    # deploys that expect executor churn set checkpoint_mode="reliable"
-    # (+ checkpoint_dir) or "persist" — see SuiteConfig.
-    checks = cfg.enabled_checks()
-    if cfg.timestamps and not has_ts:
-        # ts columns absent from this input — drop the never-evaluated
-        # checks from the metrics grid instead of reporting a vacuous pass
-        checks = [
-            c for c in checks if c not in (stats.CHECK_FUTURE, stats.CHECK_STALE)
-        ]
-    profile = profile_fut.result()
-    pool.shutdown()
-    metrics = metrics_from_violations(
-        violations,
-        docs,
-        checks,
-        part_counts=profile.select("part", F.col("n_docs").alias("docs_scanned")),
-    )
-    s0 = time.perf_counter()
-    metrics = mat(metrics)
-    t["metrics_mat"] = round(time.perf_counter() - s0, 2)
-    # blocking: a lazy unpersist leaves the old cache resident while the
-    # next run_suite call populates a fresh one — at high corpus sizes the
-    # overlap pushed the heap to its limit and collapsed into full-GC
-    # thrashing (measured: 32-core worker at 4M docs stuck at <40% of one
-    # core with RSS pinned at the heap cap)
-    s0 = time.perf_counter()
-    docs.unpersist(blocking=True)
-    t["unpersist"] = round(time.perf_counter() - s0, 2)
+            def _integrity_job():
+                s0 = time.perf_counter()
+                out = integrity.verify_integrity(
+                    docs, expected_fingerprints, include_missing=False
+                )
+                t["integrity_total"] = round(time.perf_counter() - s0, 2)
+                return out
+
+            integrity_fut = pool.submit(_integrity_job)
+            futures.append(integrity_fut)
+
+        t["branch_build"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
+        # drift-only configs leave the branch list empty — the violations
+        # union then consists solely of the drift future's block
+        violations = None
+        if parts:
+            violations = parts[0]
+            for p in parts[1:]:
+                violations = violations.unionByName(p)
+            # the union of ~18 branches carries one output partition per
+            # branch partition (branches × shuffle.partitions ≈ thousands of
+            # tiny tasks); in local mode the driver's single-threaded
+            # scheduler at ~ms/task then dominates wall time and caps scaling
+            # (measured: the union job flat at ~20s from 8→32 cores while the
+            # content pass scaled 2.3×). Coalesce to a small multiple of the
+            # executor count: still ≥2 waves of parallelism, 64× fewer task
+            # launches. (narrow — no extra shuffle)
+            # 4× (not 2×): the coalesced tasks are UNEVEN — each fuses
+            # different branch mixes — and stage-level instrumentation at 8
+            # cores showed the checkpoint stage's 16-task/2-wave shape
+            # leaving a straggler tail (utilization 0.79); 4 waves of
+            # half-size tasks smooth it while task launches stay ~100× below
+            # the un-coalesced flood
+            n_out = max(4 * docs.sparkSession.sparkContext.defaultParallelism, 16)
+            # violations feed both the sink and the metrics aggregation.
+            # Materialize the (small) result ONCE, eagerly: the 18-branch
+            # union lineage is cut, so the sink write and the metrics
+            # aggregation both read materialized rows. (A lazy .persist() is
+            # unreliable here — when the first action is a DataFrame
+            # *write*, the cache is not populated and the metrics pass
+            # re-evaluated every branch, doubling suite wall time with high
+            # variance.)
+            violations = cache.materialize(violations.coalesce(n_out))
+            held.append(violations)
+        t["union_mat"] = round(time.perf_counter() - t0, 2)
+        # every other side is a materialized block too; the unions are lazy
+        # and cheap to re-read from the sink write AND the metrics
+        # aggregation
+        if drift_fut is not None:
+            d = drift_fut.result()
+            violations = d if violations is None else violations.unionByName(d)
+        write_back = None
+        if integrity_fut is not None:
+            iv, write_back = integrity_fut.result()
+            violations = iv if violations is None else violations.unionByName(iv)
+        if violations is None:  # every family disabled: empty, stable schema
+            from datachecker_spark.contract import empty_violations
+
+            violations = cache.materialize(empty_violations(docs.sparkSession))
+            held.append(violations)
+        t["violations_job"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
+
+        # metrics/profile are per-partition-sized; materialize them eagerly
+        # too so the annotated cache can be released before returning (no
+        # cache leak across repeated run_suite calls in a long-lived
+        # session)
+        checks = cfg.enabled_checks()
+        if cfg.timestamps and not has_ts:
+            # ts columns absent from this input — drop the never-evaluated
+            # checks from the metrics grid instead of reporting a vacuous pass
+            checks = [
+                c for c in checks if c not in (stats.CHECK_FUTURE, stats.CHECK_STALE)
+            ]
+        profile = profile_fut.result()
+        metrics = metrics_from_violations(
+            violations,
+            docs,
+            checks,
+            part_counts=profile.select("part", F.col("n_docs").alias("docs_scanned")),
+        )
+        s0 = time.perf_counter()
+        metrics = cache.materialize(metrics)
+        t["metrics_mat"] = round(time.perf_counter() - s0, 2)
+    except BaseException:
+        # a failed pass hands the caller nothing to release: wait out the
+        # background jobs, then drop every block made so far
+        pool.shutdown(cancel_futures=True)
+        for f in futures:
+            if not f.cancelled() and f.exception() is None:
+                r = f.result()
+                held.extend(r if isinstance(r, tuple) else (r,))
+        cache.release(*held)
+        raise
+    finally:
+        pool.shutdown()
+        # blocking: a lazy unpersist leaves the old cache resident while the
+        # next run_suite call populates a fresh one — at high corpus sizes
+        # the overlap pushed the heap to its limit and collapsed into
+        # full-GC thrashing (measured: 32-core worker at 4M docs stuck at
+        # <40% of one core with RSS pinned at the heap cap)
+        s0 = time.perf_counter()
+        docs.unpersist(blocking=True)
+        t["unpersist"] = round(time.perf_counter() - s0, 2)
     t["metrics_profile"] = round(time.perf_counter() - t0, 2)
     return SuiteResult(violations, metrics, profile, write_back)
 
@@ -586,69 +536,75 @@ def run_with_lineage(
         n_skipped = done.count()
         todo = docs.join(F.broadcast(done), "part", "left_anti")
 
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
+    # the parts list reads only the pruned `part` column; run_suite caches
+    # the annotated rows itself, so `todo` is not cached here
     todo_parts = [r["part"] for r in todo.select("part").distinct().collect()]
     if not todo_parts:
-        todo.unpersist()
         out = {"parts_processed": 0, "parts_skipped": n_skipped}
         if expectations_path is not None:
             out["expectations_merged"] = 0
         return out
 
-    # 1. partition-local constraints over the incomplete partitions only
-    res = run_suite(
-        todo,
-        media_catalog=media_catalog,
-        expected_fingerprints=expected_fingerprints,
-        config=cfg.local_only(),
-    )
-    tio.write_table(
-        res.violations, f"{output_dir}/violations", mode="append", partition_by=["part"]
-    )
-    tio.write_table(res.metrics, f"{output_dir}/metrics", mode="append")
-    tio.write_table(res.profile, f"{output_dir}/profile", mode="append")
-
-    # 2. global constraints over the full corpus (overwrite: latest full view)
-    gcfg = cfg.global_only()
-    if gcfg.enabled_checks():
-        gres = run_suite(
-            docs,
-            expected_parts=expected_parts,
+    res = gres = None
+    try:
+        # 1. partition-local constraints over the incomplete partitions only
+        res = run_suite(
+            todo,
+            media_catalog=media_catalog,
             expected_fingerprints=expected_fingerprints,
-            config=gcfg,
+            config=cfg.local_only(),
         )
-        tio.write_table(gres.violations, f"{output_dir}/violations_global", mode="overwrite")
-        tio.write_table(gres.metrics, f"{output_dir}/metrics_global", mode="overwrite")
-        gres.release()
+        tio.write_table(
+            res.violations, f"{output_dir}/violations", mode="append", partition_by=["part"]
+        )
+        tio.write_table(res.metrics, f"{output_dir}/metrics", mode="append")
+        tio.write_table(res.profile, f"{output_dir}/profile", mode="append")
 
-    # 2b. expectation write-back, AFTER the last read of the pre-merge
-    # snapshot (the global pass's missing-expectation check) and BEFORE the
-    # lineage commit — write-then-commit ordering, and the upsert-by-key
-    # re-merge after a crash-replay is idempotent. write_back is a
-    # materialized block, so the merge never re-triggers the corpus scan.
-    n_merged = 0
-    if expectations_path is not None and res.write_back is not None:
-        n_merged = tio.merge_expectations(spark, expectations_path, res.write_back)
+        # 2. global constraints over the full corpus (overwrite: latest full view)
+        gcfg = cfg.global_only()
+        if gcfg.enabled_checks():
+            gres = run_suite(
+                docs,
+                expected_parts=expected_parts,
+                expected_fingerprints=expected_fingerprints,
+                config=gcfg,
+            )
+            tio.write_table(gres.violations, f"{output_dir}/violations_global", mode="overwrite")
+            tio.write_table(gres.metrics, f"{output_dir}/metrics_global", mode="overwrite")
+            gres.release()
 
-    # 3. commit point: lineage written last
-    lineage_rows = res.metrics.groupBy("part").agg(
-        F.sum("violation_count").alias("violation_count"),
-        F.max("docs_scanned").alias("docs_scanned"),
-    ).select(
-        F.lit(run_id).alias("run_id"),
-        "part",
-        F.lit("suite").alias("check"),
-        F.lit("done").alias("status"),
-        "violation_count",
-        "docs_scanned",
-        F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())).alias("completed_at"),
-    )
-    tio.write_table(lineage_rows, lineage_path, mode="append")
-    # lineage derives from res.metrics (a materialized block) — release
-    # only after the commit write; this is the resume loop where unreleased
-    # blocks would otherwise accumulate one generation per batch
-    res.release()
-    todo.unpersist()
+        # 2b. expectation write-back, AFTER the last read of the pre-merge
+        # snapshot (the global pass's missing-expectation check) and BEFORE
+        # the lineage commit — write-then-commit ordering, and the
+        # upsert-by-key re-merge after a crash-replay is idempotent.
+        # write_back is a materialized block, so the merge never
+        # re-triggers the corpus scan.
+        n_merged = 0
+        if expectations_path is not None and res.write_back is not None:
+            n_merged = tio.merge_expectations(spark, expectations_path, res.write_back)
+
+        # 3. commit point: lineage written last
+        lineage_rows = res.metrics.groupBy("part").agg(
+            F.sum("violation_count").alias("violation_count"),
+            F.max("docs_scanned").alias("docs_scanned"),
+        ).select(
+            F.lit(run_id).alias("run_id"),
+            "part",
+            F.lit("suite").alias("check"),
+            F.lit("done").alias("status"),
+            "violation_count",
+            "docs_scanned",
+            F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())).alias("completed_at"),
+        )
+        tio.write_table(lineage_rows, lineage_path, mode="append")
+    finally:
+        # lineage derives from res.metrics (a materialized block) — release
+        # only after the commit write, and also when a write raised: this is
+        # the resume loop where unreleased blocks would otherwise accumulate
+        # one generation per batch
+        for r in (res, gres):
+            if r is not None:
+                r.release()
     out = {"parts_processed": len(todo_parts), "parts_skipped": n_skipped}
     if expectations_path is not None:
         out["expectations_merged"] = n_merged

@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from datachecker_spark import cache
+
 
 # --- SQL-expressible helpers (oracle/one-off use; not the hot path) ---------
 
@@ -355,7 +357,6 @@ def cosine_near_dup_pairs(
     planes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    materialize=None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a, id_b, cos ≥ threshold).
     LSH-banded candidates, vectorized exact-cosine verification — the
@@ -371,16 +372,16 @@ def cosine_near_dup_pairs(
     candidate volume the dominant term, so candidate row width is the
     bandwidth knob.
 
-    materialize: df->df hook for the (id, vec) projection, which is read
-    three times (banding + both verify join-backs) — the cluster-deploy
-    seam drift/minhash/ngram accept (runner.materializer). Default: lazy
-    localCheckpoint; caller releases via cache.release/release_all. The
-    banded ids table is NOT materialized: re-deriving it is one cheap GEMM
-    pass over the materialized base."""
+    The (id, vec) projection is materialized once (cache.materialize): it
+    is read three times (banding + both verify join-backs). Its block is a
+    LogicalRDD leaf of the returned plan: dispose with
+    cache.release(result). The banded ids table is NOT materialized:
+    re-deriving it is one cheap GEMM pass over the materialized base."""
     hp = _hyperplanes(dim, planes, seed)
     sig = signature_udf(hp)
-    base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    base = (materialize or (lambda d: d.localCheckpoint(eager=False)))(base)
+    base = cache.materialize(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    )
     banded = _banded(base, sig(F.col("vec")), bands, planes).select(
         "id", "band_idx", "band_val"
     )

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datachecker_spark import cache
+
 # ---------------------------------------------------------------------------
 # tokenization / shingles
 # ---------------------------------------------------------------------------
@@ -85,10 +87,10 @@ def shingle_sets(
     still compute this once, materialize it, and hand it to each consumer
     via their `sets=` parameter: one corpus scan + one tokenize pass total
     instead of one per operator. Contract: the CALLER owns the
-    materialization (pass an already-checkpointed frame) and the disposal
-    (the checkpoint blocks surface as LogicalRDD leaves of every consumer's
+    materialization (pass cache.materialize(shingle_sets(...))) and the
+    disposal (the blocks surface as LogicalRDD leaves of every consumer's
     plan, so cache.release(result) on any consumer reaches them — same
-    contract as the operators' internal checkpoints)."""
+    contract as the operators' internal blocks)."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array(tokens(text_col))).alias("toks"),
@@ -119,7 +121,6 @@ def minhash_near_dup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    materialize=None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a, id_b, jaccard ≥ threshold).
@@ -128,32 +129,21 @@ def minhash_near_dup_pairs(
     Jaccard verification on the distinct shingle sets (estimated similarity
     never decides membership — the signature only prunes the pair space).
 
-    materialize: df->df hook for the shingle-set materialization — the same
-    cluster-deploy seam the drift builders accept (runner.materializer:
-    reliable checkpoint / persist for deployments with executor churn).
-    Default: lazy localCheckpoint (fastest; blocks die with executors).
+    The shingle sets are materialized once (cache.materialize) and read
+    three times: signatures and both verify sides. Their block is a
+    LogicalRDD leaf of the returned plan: dispose with cache.release(result).
 
     sets: pre-tokenized shingle_sets(...) output shared across operators in
     a composition (see that docstring). The caller owns its materialization
-    and disposal; `materialize`/`shingle_k`/`text_col` are ignored for the
-    shingle stage when provided."""
+    and disposal; `shingle_k`/`text_col` are ignored for the shingle stage
+    when provided."""
     rows = num_hashes // bands
     if sets is not None:
         base = sets
     else:
-        base = shingle_sets(df, id_col, text_col, shingle_k=shingle_k)
-        # materialize the shingle sets once (read 3x below: signatures + both
-        # verify sides). Default lazy localCheckpoint, NOT persist: persist()
-        # would double-cache (the block manager AND the checkpoint store) with
-        # no unpersist point inside a lazy API. The block is NOT GC-reclaimed
-        # (cache.py: the ContextCleaner path is dead from Python) — callers
-        # done with the result dispose of it with cache.release(result_df),
-        # which reaches this block as a LogicalRDD leaf of the returned plan.
-        # Persist-mode materializers (whose InMemoryRelation is NOT a
-        # LogicalRDD leaf) track the intermediate in the hook and release it
-        # directly — the same _mat_track pattern the runner uses for drift's
-        # aggregates.
-        base = (materialize or (lambda d: d.localCheckpoint(eager=False)))(base)
+        base = cache.materialize(
+            shingle_sets(df, id_col, text_col, shingle_k=shingle_k)
+        )
     # signatures via the relational (codegen'd) path; candidates carry ONLY
     # ids through the band explode / self-join / dedup — shuffling the
     # shingle arrays 16× per doc is the data amplification that kills this
@@ -207,7 +197,6 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     hash_shingles: bool = False,
     candidates: str = "join",
-    materialize=None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs with exact shingle-set Jaccard ≥ threshold.
@@ -237,7 +226,7 @@ def ngram_jaccard_pairs(
     tools/bench_ngram_modes.py, 2026-08-20) prefix wins at EVERY
     threshold — t=0.2: 12.9s vs 23.7s, t=0.5: 10.5s vs 20.2s, t=0.7:
     10.0s vs 18.0s (1.8–1.9×, identical row counts asserted per cell; both
-    modes then still paid quadratic shingling, see `materialize` below).
+    modes then still paid quadratic shingling, see shingle_sets).
     "prefix" is therefore the production path for the standalone pair
     queries; "join" remains the count-based oracle-shaped plan. In the
     full dedup_e2e COMPOSITION the two modes measure flat at sf0.1
@@ -267,26 +256,20 @@ def ngram_jaccard_pairs(
     self-join as well as set sizes; same negligible probability, noted for
     completeness. Default False: byte-exact oracle semantics.
 
-    materialize: df->df hook for the tokenize-once materialization of the
-    exploded shingle table (cluster-deploy seam, see minhash_near_dup_pairs).
-    Default: lazy localCheckpoint. Measured at sf0.1/local[32], best-of-2
-    cold (release_all between samples), 2026-08-18: string re-derive 78.8s,
-    string checkpoint 39.9s, hashed re-derive 50.4s, hashed checkpoint
-    26.3s — the checkpoint wins for BOTH key types (4 interpreted-HOF
-    tokenization passes cost more than the block write/read), and hashing
-    the keys before the checkpoint cuts the materialized bytes and the
-    self-join hash/compare cost on top. hash_shingles=True is therefore
-    the production default for the entry query; the bench-visible r3
-    regression (45.4s) was the string-key checkpoint. These figures
-    predate linear shingling (see shingle_sets), when each tokenization
-    pass was quadratic per document; the checkpoint-vs-re-derive choice
-    has not been re-measured since.
+    The exploded shingle table is materialized once (cache.materialize)
+    and read by every consumer: the hot-shingle count, both self-join sides
+    and the set sizes would otherwise each re-run the tokenization. The
+    returned plan's LogicalRDD leaves are the operator's blocks: dispose
+    with cache.release(result). The prefix path releases the exploded
+    table itself once its sorted-array table is written.
 
     sets: pre-tokenized shingle_sets(...) output shared across operators in
     a composition (see that docstring). The caller owns its materialization
     and disposal; the exploded table is then re-derived from the caller's
     materialized blocks per consumer (codegen explode+hash over a block
     scan) instead of being checkpointed a second time here."""
+    if candidates not in ("join", "prefix"):
+        raise ValueError(f"candidates must be 'join' or 'prefix', got {candidates!r}")
     base = (
         sets
         if sets is not None
@@ -298,21 +281,22 @@ def ngram_jaccard_pairs(
     )
     # tokenize ONCE: every consumer below (hot-shingle count, both self-join
     # sides, set sizes) otherwise re-runs the shingling over the corpus —
-    # 4 full tokenization passes per query. Caller
-    # disposes via cache.release(result) — see minhash_near_dup_pairs.
-    # With caller-provided `sets` the upstream is already materialized, so
-    # the second checkpoint is skipped.
+    # 4 full tokenization passes per query. With caller-provided `sets` the
+    # upstream is already materialized, so the second checkpoint is skipped.
+    own = None
     if sets is None:
-        ex = (materialize or (lambda d: d.localCheckpoint(eager=False)))(ex)
+        ex = own = cache.materialize(ex)
     if max_df is not None:
         hot = (
             ex.groupBy("s").agg(F.count("*").alias("_df")).where(F.col("_df") > max_df)
         )
         ex = ex.join(F.broadcast(hot.select("s")), "s", "left_anti")
     if candidates == "prefix":
-        return _jaccard_prefix_filtered(ex, threshold, materialize)
-    if candidates != "join":
-        raise ValueError(f"candidates must be 'join' or 'prefix', got {candidates!r}")
+        try:
+            return _jaccard_prefix_filtered(ex, threshold)
+        finally:
+            # the result reads only the sorted-array block written inside
+            cache.release(own)
     # |capped shingle set| per doc == row count in ex (shingles are distinct
     # per doc); identical to size(sh) when max_df is None
     sizes = ex.groupBy("id").agg(F.count("*").alias("n"))
@@ -337,7 +321,7 @@ def ngram_jaccard_pairs(
     return out.where(F.col("jaccard") >= threshold)
 
 
-def _jaccard_prefix_filtered(ex: DataFrame, threshold: float, materialize) -> DataFrame:
+def _jaccard_prefix_filtered(ex: DataFrame, threshold: float) -> DataFrame:
     """candidates="prefix" body of ngram_jaccard_pairs (see its docstring
     for the completeness proof): ex is the (id, s) exploded distinct-shingle
     table AFTER the hot-shingle guard.
@@ -365,7 +349,7 @@ def _jaccard_prefix_filtered(ex: DataFrame, threshold: float, materialize) -> Da
         F.transform("arr", lambda e: e["s"]).alias("ss"),
         F.transform(F.slice("arr", F.lit(1), p), lambda e: e["s"]).alias("pref"),
     )
-    docs_arr = (materialize or (lambda d: d.localCheckpoint(eager=False)))(docs_arr)
+    docs_arr = cache.materialize(docs_arr)
     pr = docs_arr.select("id", "n", F.explode("pref").alias("s"))
     cand = (
         pr.alias("x")

@@ -19,30 +19,24 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=2000)
     ap.add_argument(
         "--checkpoint-dir", default=None,
-        help="HDFS/S3 dir for reliable intermediate checkpoints; sets "
-        "checkpoint_mode='reliable' so materialized blocks survive executor "
-        "loss (default: localCheckpoint — fastest, executor-resident)",
-    )
-    ap.add_argument(
-        "--checkpoint-mode", default=None,
-        choices=["local", "reliable", "persist"],
-        help="override the materialization seam explicitly (see SuiteConfig)",
+        help="HDFS/S3 dir for the SparkContext's checkpoints: the engine's "
+        "blocks then survive executor loss (default: local checkpoints — "
+        "fastest, executor-resident)",
     )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("doccheck-suite").getOrCreate()
+    if args.checkpoint_dir:
+        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
     from datachecker_spark.datagen import (
         generate_documents,
         generate_expected_fingerprints,
         generate_media_catalog,
     )
-    from datachecker_spark.runner import SuiteConfig, run_suite, run_with_lineage
-
-    mode = args.checkpoint_mode or ("reliable" if args.checkpoint_dir else "local")
-    cfg = SuiteConfig(checkpoint_mode=mode, checkpoint_dir=args.checkpoint_dir)
+    from datachecker_spark.runner import run_suite, run_with_lineage
 
     if args.input:
         docs = spark.read.parquet(args.input)
@@ -55,14 +49,10 @@ def main() -> None:
         stats = run_with_lineage(
             docs, args.output, run_id="submit",
             media_catalog=catalog, expected_fingerprints=expected,
-            config=cfg,
         )
         print(json.dumps(stats))
     else:
-        res = run_suite(
-            docs, media_catalog=catalog, expected_fingerprints=expected,
-            config=cfg,
-        )
+        res = run_suite(docs, media_catalog=catalog, expected_fingerprints=expected)
         n = res.violations.count()
         checks = res.metrics.select("check").distinct().count()
         print(json.dumps({"violations": n, "checks": checks}))
